@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from etl_data_spark.io import layout as L
 from etl_data_spark.operators.text import fingerprint
 
 from etl_data_spark.caching import pin
@@ -934,17 +935,17 @@ def minhash_lsh_pairs_incremental(
 # base side's signatures live nowhere. At 100 TB that is an O(corpus)
 # compute tax on every ingest (VERDICT r11 missing #1). The layout below is
 # the persisted form: the corpus' band table and shingle sets are written
-# ONCE (then appended per batch), self-described by the same
-# ``_ann_meta.json`` sidecar contract as the ANN layouts
-# (operators/similarity.py) — probes and appends resolve the write-time
-# parameters from the sidecar, and an explicit parameter that contradicts
-# it fails loudly instead of silently probing bands hashed under a
-# different family.
+# ONCE (then appended per batch), self-described by the same layout
+# contract as the ANN layouts (io/layout.py, kind ``minhash_bands``) —
+# probes and appends resolve the write-time parameters from the sidecar,
+# so a batch is never signed under a different hash family than the
+# stored bands.
 #
 # Layout on disk (all plain parquet, any Hadoop filesystem):
 #   {path}/bands/     (doc_id, band) partitioned by band_idx — the LSH
 #                     index itself; narrow rows (~id + short string), so a
-#                     full scan costs band-table bytes, never corpus bytes
+#                     full scan costs band-table bytes, never corpus bytes.
+#                     Holds the layout's sidecar.
 #   {path}/shingles/  (doc_id, sh array) — the verification side, read
 #                     only for candidate doc_ids
 #
@@ -995,28 +996,17 @@ def write_minhash_bands(
     for the recall floor at ``threshold`` exactly like
     :func:`minhash_lsh_pairs` (the threshold itself is a MINING
     parameter — probes choose their own)."""
-    from etl_data_spark.operators.similarity import _write_layout_meta
-
     if target_recall is not None:
         rows_per_band, bands = minhash_auto_params(threshold, target_recall)
         num_hashes = rows_per_band * bands
-    rows_per_band = num_hashes // bands
-    docs = _shingled_docs(df, id_col, text_col, shingle_n)
-    (
-        _dedup_layout_banded(docs, num_hashes, bands, rows_per_band, hash_impl)
-        .write.mode("overwrite")
-        .partitionBy("band_idx")
-        .parquet(f"{path}/bands")
-    )
-    docs.select("doc_id", "sh").write.mode("overwrite").parquet(
-        f"{path}/shingles"
-    )
-    spark = df.sparkSession
-    _write_layout_meta(
-        spark,
-        f"{path}/bands",
+    L.write(
+        L.MINHASH_BANDS,
+        df,
+        path,
+        lambda d: _minhash_layout_rows(
+            d, id_col, text_col, shingle_n, num_hashes, bands, hash_impl
+        ),
         {
-            "kind": "minhash_bands",
             "shingle_n": int(shingle_n),
             "num_hashes": int(num_hashes),
             "bands": int(bands),
@@ -1025,20 +1015,24 @@ def write_minhash_bands(
             "text_col": text_col,
         },
     )
-    _write_layout_meta(spark, f"{path}/shingles", {"kind": "minhash_shingles"})
 
 
-def _read_bands_meta(spark, path: str, op: str) -> dict:
-    from etl_data_spark.operators.similarity import _read_layout_meta
-
-    meta = _read_layout_meta(spark, f"{path}/bands")
-    if meta is None or meta.get("kind") != "minhash_bands":
-        raise ValueError(
-            f"{op}: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'minhash_bands' — write it with write_minhash_bands first."
-        )
-    return meta
+def _minhash_layout_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    hash_impl: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The layout's two tables for a batch: (doc_id, band, band_idx) band
+    rows and (doc_id, sh) shingle sets."""
+    docs = _shingled_docs(df, id_col, text_col, shingle_n)
+    banded = _dedup_layout_banded(
+        docs, num_hashes, bands, num_hashes // bands, hash_impl
+    )
+    return banded, docs.select("doc_id", "sh")
 
 
 def append_minhash_bands(df: DataFrame, path: str) -> None:
@@ -1050,21 +1044,18 @@ def append_minhash_bands(df: DataFrame, path: str) -> None:
     NEW (append-only ingest — the standard dedup-pipeline contract: a
     batch is probed, its survivors appended). Accumulated small files
     fold back with :func:`compact_minhash_bands`."""
-    spark = df.sparkSession
-    meta = _read_bands_meta(spark, path, "append_minhash_bands")
-    rows_per_band = meta["num_hashes"] // meta["bands"]
-    docs = _shingled_docs(df, meta["id_col"], meta["text_col"], meta["shingle_n"])
-    (
-        _dedup_layout_banded(
-            docs, meta["num_hashes"], meta["bands"], rows_per_band,
-            meta["hash_impl"],
-        )
-        .write.mode("append")
-        .partitionBy("band_idx")
-        .parquet(f"{path}/bands")
-    )
-    docs.select("doc_id", "sh").write.mode("append").parquet(
-        f"{path}/shingles"
+    op = "append_minhash_bands"
+    m = L.open(df.sparkSession, L.MINHASH_BANDS, path, op)
+    L.append(
+        L.MINHASH_BANDS,
+        df,
+        path,
+        lambda d: _minhash_layout_rows(
+            d, m["id_col"], m["text_col"], m["shingle_n"], m["num_hashes"],
+            m["bands"], m["hash_impl"],
+        ),
+        m,
+        op,
     )
 
 
@@ -1091,7 +1082,7 @@ def dedup_incremental_at_rest(
     narrow scan), never corpus text bytes — closing the
     recompute-the-corpus-per-batch gap its on-the-fly twin documents."""
     spark = delta.sparkSession
-    meta = _read_bands_meta(spark, path, "dedup_incremental_at_rest")
+    meta = L.open(spark, L.MINHASH_BANDS, path, "dedup_incremental_at_rest")
     rows_per_band = meta["num_hashes"] // meta["bands"]
     docs_delta = _shingled_docs(
         delta, meta["id_col"], meta["text_col"], meta["shingle_n"]
@@ -1142,17 +1133,13 @@ def dedup_incremental_at_rest(
 
 
 def compact_minhash_bands(spark, path: str, target_files_per_partition: int = 1) -> int:
-    """Compact the layout's accumulated append files: the band table
-    through the generic :func:`~etl_data_spark.operators.similarity.compact_layout`
-    (band_idx-partitioned, sidecar preserved byte-for-byte), the shingle
-    table through the same machinery's unpartitioned branch. Probe
-    results are identical before and after. Returns total data files."""
-    from etl_data_spark.operators.similarity import compact_layout
-
-    _read_bands_meta(spark, path, "compact_minhash_bands")
-    n = compact_layout(spark, f"{path}/bands", target_files_per_partition)
-    n += compact_layout(spark, f"{path}/shingles", target_files_per_partition)
-    return n
+    """Compact the layout's accumulated append files — the band table
+    (band_idx-partitioned) and the shingle table — through the generic
+    :func:`~etl_data_spark.operators.similarity.compact_layout`, every
+    sidecar preserved byte-for-byte. Probe results are identical before
+    and after. Returns total data files."""
+    L.open(spark, L.MINHASH_BANDS, path, "compact_minhash_bands")
+    return L.compact(spark, path, target_files_per_partition)
 
 
 def connected_components_incremental(
@@ -1411,19 +1398,9 @@ def write_gram_index(
     hash bucket of the gram — the at-rest layout that lets a batch
     probe for cross-document repeated spans WITHOUT re-gramming the
     corpus (the substring-dedup twin of ``write_minhash_bands``).
-    Sidecar-described (`_ann_meta.json`, kind ``gram_index``); the
-    bucket is purely a PartitionFilter key (xxhash64 — engine-local,
-    never compared across engines)."""
-    from etl_data_spark.operators.similarity import _write_layout_meta
-
-    stats = (
-        _gram_positions(df, id_col, text_col, n)
-        .groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("gram"), F.lit(buckets)).cast("int")
-        )
-    )
+    Layout kind ``gram_index``: the sidecar sits at ``path``, the table
+    at ``{path}/grams``; the bucket is purely a PartitionFilter key
+    (xxhash64 — engine-local, never compared across engines)."""
     # Cluster by the partition column before the dynamic-partition write
     # (guide §6): without it every write task holding rows of every
     # bucket emits tasks x buckets files (measured 256 at sf0.1 — 4x the
@@ -1431,14 +1408,14 @@ def write_gram_index(
     # then open `probed buckets` files, not 4x that. At corpus scale,
     # raise ``buckets`` (the existing knob) so one bucket ~ one healthy
     # file; the write parallelism follows the bucket count.
-    stats.repartition(buckets, "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(f"{path}/grams")
-    _write_layout_meta(
-        df.sparkSession,
+    L.write(
+        L.GRAM_INDEX,
+        df,
         path,
+        lambda d: _gram_stats(
+            _gram_positions(d, id_col, text_col, n), buckets, "n_docs"
+        ).repartition(buckets, "bucket"),
         {
-            "kind": "gram_index",
             "n": int(n),
             "id_col": id_col,
             "text_col": text_col,
@@ -1447,17 +1424,16 @@ def write_gram_index(
     )
 
 
-def _read_gram_meta(spark, path: str, op: str) -> dict:
-    from etl_data_spark.operators.similarity import _read_layout_meta
-
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "gram_index":
-        raise ValueError(
-            f"{op}: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'gram_index' — write it with write_gram_index first."
+def _gram_stats(positions: DataFrame, buckets: int, alias: str) -> DataFrame:
+    """(gram, <alias> distinct-document count, bucket) rows of a batch's
+    gram positions — the gram index's row assignment."""
+    return (
+        positions.groupBy("gram")
+        .agg(F.count_distinct("doc_id").alias(alias))
+        .withColumn(
+            "bucket", F.pmod(F.xxhash64("gram"), F.lit(buckets)).cast("int")
         )
-    return meta
+    )
 
 
 def duplicate_spans_incremental_at_rest(
@@ -1481,7 +1457,9 @@ def duplicate_spans_incremental_at_rest(
     aggregates per gram before merging (same contract as the band
     table's accumulated appends)."""
     spark = delta.sparkSession
-    meta = _read_gram_meta(spark, path, "duplicate_spans_incremental_at_rest")
+    meta = L.open(
+        spark, L.GRAM_INDEX, path, "duplicate_spans_incremental_at_rest"
+    )
     n, buckets = meta["n"], meta["buckets"]
     if min_len is None:
         min_len = n
@@ -1492,14 +1470,7 @@ def duplicate_spans_incremental_at_rest(
         _gram_positions(delta, meta["id_col"], meta["text_col"], n),
         StorageLevel.MEMORY_AND_DISK,
     )
-    dstats = pin(
-        dgp.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("gram"), F.lit(buckets)).cast("int")
-        ),
-        StorageLevel.MEMORY_AND_DISK,
-    )
+    dstats = pin(_gram_stats(dgp, buckets, "nd"), StorageLevel.MEMORY_AND_DISK)
     # bounded collect: at most `buckets` distinct values — the partition
     # filter a probe needs is driver-known by construction
     probe_buckets = [
@@ -1527,21 +1498,20 @@ def append_gram_index(df: DataFrame, path: str) -> None:
     (dynamic-partition append — untouched buckets are never rewritten).
     The batch's doc ids must be disjoint from the corpus'; counts for a
     gram accumulate as extra rows, which probes SUM per gram. Fold
-    accumulated files with ``similarity.compact_layout`` (the generic
-    compactor understands the ``bucket`` partition column; duplicate
-    gram rows survive compaction by design — exactness lives in the
-    probe-side aggregation)."""
-    spark = df.sparkSession
-    meta = _read_gram_meta(spark, path, "append_gram_index")
-    n, buckets = meta["n"], meta["buckets"]
-    (
-        _gram_positions(df, meta["id_col"], meta["text_col"], n)
-        .groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("gram"), F.lit(buckets)).cast("int")
-        )
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/grams")
+    accumulated files with ``similarity.compact_layout`` on the layout
+    root (duplicate gram rows survive compaction by design — exactness
+    lives in the probe-side aggregation)."""
+    op = "append_gram_index"
+    m = L.open(df.sparkSession, L.GRAM_INDEX, path, op)
+    L.append(
+        L.GRAM_INDEX,
+        df,
+        path,
+        lambda d: _gram_stats(
+            _gram_positions(d, m["id_col"], m["text_col"], m["n"]),
+            m["buckets"],
+            "n_docs",
+        ),
+        m,
+        op,
     )

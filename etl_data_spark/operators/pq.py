@@ -31,7 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_data_spark.io import layout as L
 from etl_data_spark.operators import _sqlexpr as _sx
+from etl_data_spark.operators.similarity import (
+    _auto_centroids,
+    _cells,
+    _centroids_jsonable,
+    ivf_assign,
+    ivf_probes,
+)
 
 
 def train_pq(
@@ -76,8 +84,6 @@ def _training_sample(
             df.orderBy(id_col).limit(sample_rows).select(vec_col).collect()
         )
         return np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-
-    from etl_data_spark.operators.similarity import ivf_assign
 
     cmap = {int(c): np.asarray(v, dtype=np.float64) for c, v in centroids}
     rows = (
@@ -336,8 +342,8 @@ def write_ivf_pq(
     costs (PQ codes). ``keep_vectors=True`` (default) stores the vector
     column beside the codes so probes can exact-rerank their shortlist;
     parquet column pruning keeps code-only probes from ever reading it.
-    Parameters persist in the ``_ann_meta.json`` sidecar (kind
-    ``ivf_pq``).
+    Parameters are recorded in the layout's sidecar (kind ``ivf_pq``);
+    input columns ``cell``/``pq_code`` are rejected.
 
     ``residual=True`` (default, r12): PQ-encode the RESIDUAL
     ``x − centroid(cell)`` instead of the raw vector — the canonical
@@ -358,26 +364,10 @@ def write_ivf_pq(
     the executor-side scan stays code-only, byte-identical plan shape to
     the unrotated layout), and exact rerank is untouched (L2 is
     rotation-invariant, stored vectors stay raw)."""
-    from etl_data_spark.operators.similarity import (
-        _bounded_count,
-        _centroids_jsonable,
-        _guard_reserved_cols,
-        _write_layout_meta,
-        ivf_assign,
-        kmeans_refine,
-        sample_centroids,
-    )
-
-    _guard_reserved_cols(df, "write_ivf_pq", ("cell", "pq_code"))
-
     if centroids is None:
-        n = n_rows if n_rows is not None else _bounded_count(df)
-        import math
-
-        k_cells = max(1, math.ceil(n / target_cell_rows))
-        centroids = sample_centroids(df, k_cells, id_col, vec_col)
-        if refine_iters > 0:
-            centroids = kmeans_refine(df, centroids, refine_iters, vec_col)
+        centroids = _auto_centroids(
+            df, target_cell_rows, n_rows, refine_iters, id_col, vec_col
+        )
     if opq and rotation is None and codebooks is None:
         trainer = train_opq_residual if residual else train_opq
         kwargs = {"centroids": centroids} if residual else {}
@@ -405,21 +395,15 @@ def write_ivf_pq(
                 iters=pq_iters, id_col=id_col, vec_col=vec_col, **kwargs,
             )
     cols = [id_col, "pq_code", "cell"] + ([vec_col] if keep_vectors else [])
-    assigned = ivf_assign(df, centroids, vec_col)
-    encoded = _encode_for_layout(
-        assigned, centroids, codebooks, vec_col, residual, rotation
-    )
-    (
-        encoded.select(*cols)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    _write_layout_meta(
-        df.sparkSession,
+    L.write(
+        L.IVF_PQ,
+        df,
         path,
+        lambda d: _encode_for_layout(
+            ivf_assign(d, centroids, vec_col), centroids, codebooks,
+            vec_col, residual, rotation,
+        ).select(*cols),
         {
-            "kind": "ivf_pq",
             "centroids": _centroids_jsonable(centroids),
             "codebooks": codebooks,
             "vec_col": vec_col,
@@ -487,19 +471,8 @@ def ivfpq_topk_at_rest(
     probed cell against its own LUT built from ``query −
     centroid(cell)`` (n_probe tiny literal tables chained in one CASE —
     the scan stays code-only either way)."""
-    from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
-        ivf_probes,
-    )
-
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "ivf_pq":
-        raise ValueError(
-            f"ivfpq_topk_at_rest: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'ivf_pq' — write it with write_ivf_pq first."
-        )
-    cents = [(int(c), list(v)) for c, v in meta["centroids"]]
+    meta = L.open(spark, L.IVF_PQ, path, "ivfpq_topk_at_rest")
+    cents = _cells(meta)
     books = meta["codebooks"]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     res = meta.get("encoding", "raw") == "residual"
@@ -570,42 +543,30 @@ def append_ivf_pq(df: DataFrame, path: str) -> None:
     their cell directories. Untouched cells are never rewritten; a
     growing corpus costs writes proportional to the batch. The composed
     twin of ``append_ivf_partitioned`` / ``append_ann_bucketed``; fold
-    accumulated append files with ``similarity.compact_layout`` (which
-    understands the ``cell`` partition column), and under drift rewrite
-    with ``write_ivf_pq`` (both quantizers retrain at the current
-    corpus — the IVF-PQ analogue of ``retrain_ivf_layout``)."""
-    from etl_data_spark.operators.similarity import (
-        _guard_reserved_cols,
-        _read_layout_meta,
-        ivf_assign,
-    )
-
-    _guard_reserved_cols(df, "append_ivf_pq", ("cell", "pq_code"))
-    meta = _read_layout_meta(df.sparkSession, path)
-    if meta is None or meta.get("kind") != "ivf_pq":
-        raise ValueError(
-            f"append_ivf_pq: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'ivf_pq' — write it with write_ivf_pq first."
-        )
-    cents = [(int(c), list(v)) for c, v in meta["centroids"]]
+    accumulated append files with ``similarity.compact_layout``, and
+    under drift rewrite with ``write_ivf_pq`` (both quantizers retrain at
+    the current corpus — the IVF-PQ analogue of ``retrain_ivf_layout``)."""
+    op = "append_ivf_pq"
+    meta = L.open(df.sparkSession, L.IVF_PQ, path, op)
+    cents = _cells(meta)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cols = [id_col, "pq_code", "cell"] + (
         [vec_col] if meta.get("has_vectors") else []
     )
-    encoded = _encode_for_layout(
-        ivf_assign(df, cents, vec_col),
-        cents,
-        meta["codebooks"],
-        vec_col,
-        meta.get("encoding", "raw") == "residual",
-        meta.get("rotation"),
-    )
-    (
-        encoded.select(*cols)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
+    L.append(
+        L.IVF_PQ,
+        df,
+        path,
+        lambda d: _encode_for_layout(
+            ivf_assign(d, cents, vec_col),
+            cents,
+            meta["codebooks"],
+            vec_col,
+            meta.get("encoding", "raw") == "residual",
+            meta.get("rotation"),
+        ).select(*cols),
+        meta,
+        op,
     )
 
 
@@ -762,32 +723,24 @@ def write_sq8(
     keep_vectors: bool = True,
 ) -> None:
     """Materialize the SQ8 layout: (id, sq_code[, vector]) parquet with
-    the bounds persisted in the ``_ann_meta.json`` sidecar (kind
-    ``sq8``) — probes and appends dequantize under the EXACT bounds the
-    codes were written with (a mismatched bound set would silently skew
-    every distance). ``keep_vectors=True`` stores the float vectors
-    beside the codes for exact rerank; column pruning keeps code-only
-    probes from reading them. Unlike IVF layouts there is no partition
-    pruning — SQ8's win is the 4x byte reduction of the full scan
-    (compose with ``write_ivf_pq`` when you want WHICH-row pruning
+    the bounds recorded in the layout's sidecar (kind ``sq8``) — probes
+    and appends dequantize under the EXACT bounds the codes were written
+    with (a mismatched bound set would silently skew every distance); an
+    input ``sq_code`` column is rejected. ``keep_vectors=True`` stores
+    the float vectors beside the codes for exact rerank; column pruning
+    keeps code-only probes from reading them. Unlike IVF layouts there is
+    no partition pruning — SQ8's win is the 4x byte reduction of the full
+    scan (compose with ``write_ivf_pq`` when you want WHICH-row pruning
     too)."""
-    from etl_data_spark.operators.similarity import (
-        _guard_reserved_cols,
-        _write_layout_meta,
-    )
-
-    _guard_reserved_cols(df, "write_sq8", ("sq_code",))
     if bounds is None:
         bounds = train_sq8(df, sample_rows, id_col, vec_col)
     cols = [id_col, "sq_code"] + ([vec_col] if keep_vectors else [])
-    sq8_encode(df, bounds, vec_col).select(*cols).write.mode(
-        "overwrite"
-    ).parquet(path)
-    _write_layout_meta(
-        df.sparkSession,
+    L.write(
+        L.SQ8,
+        df,
         path,
+        lambda d: sq8_encode(d, bounds, vec_col).select(*cols),
         {
-            "kind": "sq8",
             "mins": [float(v) for v in bounds["mins"]],
             "maxs": [float(v) for v in bounds["maxs"]],
             "id_col": id_col,
@@ -801,26 +754,20 @@ def append_sq8(df: DataFrame, path: str) -> None:
     """Append a batch under the layout's OWN bounds (sidecar-resolved;
     saturating encode absorbs out-of-sample values). Untouched files are
     never rewritten."""
-    from etl_data_spark.operators.similarity import (
-        _guard_reserved_cols,
-        _read_layout_meta,
-    )
-
-    meta = _read_layout_meta(df.sparkSession, path)
-    if meta is None or meta.get("kind") != "sq8":
-        raise ValueError(
-            f"append_sq8: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'sq8' — write it with write_sq8 first."
-        )
-    _guard_reserved_cols(df, "append_sq8", ("sq_code",))
+    op = "append_sq8"
+    meta = L.open(df.sparkSession, L.SQ8, path, op)
     bounds = {"mins": meta["mins"], "maxs": meta["maxs"]}
     cols = [meta["id_col"], "sq_code"] + (
         [meta["vec_col"]] if meta.get("has_vectors") else []
     )
-    sq8_encode(df, bounds, meta["vec_col"]).select(*cols).write.mode(
-        "append"
-    ).parquet(path)
+    L.append(
+        L.SQ8,
+        df,
+        path,
+        lambda d: sq8_encode(d, bounds, meta["vec_col"]).select(*cols),
+        meta,
+        op,
+    )
 
 
 def sq8_topk_at_rest(
@@ -835,15 +782,7 @@ def sq8_topk_at_rest(
     pruned away); with ``shortlist`` set the candidates exact-rerank
     against the stored vectors of the same layout. Bounds resolve from
     the sidecar."""
-    from etl_data_spark.operators.similarity import _read_layout_meta
-
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "sq8":
-        raise ValueError(
-            f"sq8_topk_at_rest: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'sq8' — write it with write_sq8 first."
-        )
+    meta = L.open(spark, L.SQ8, path, "sq8_topk_at_rest")
     bounds = {"mins": meta["mins"], "maxs": meta["maxs"]}
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     scan = spark.read.parquet(path)

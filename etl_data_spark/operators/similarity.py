@@ -23,12 +23,15 @@ emit boundary anyway.
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_data_spark.io import layout as L
+from etl_data_spark.io.layout import compact as compact_layout  # noqa: F401
+from etl_data_spark.io.layout import skew_report as layout_skew_report  # noqa: F401
+from etl_data_spark.io.layout import stats as layout_stats  # noqa: F401
 from etl_data_spark.operators import _sqlexpr as _sx
 
 
@@ -812,113 +815,39 @@ def ivf_topk(
 
 
 # --------------------------------------------------------------------------
-# At-rest layout metadata sidecar
+# At-rest layouts (contract: io/layout.py)
 #
-# The r9 at-rest layouts had a read-time footgun: probes and appends had to
-# re-supply the EXACT write-time parameters (planes/seed or centroid list);
-# a mismatch silently probed the wrong directories, and append_ann_bucketed
-# would happily mix two plane-sets in one layout — corrupted probes forever
-# after. The sidecar makes the layout self-describing: the write paths
-# persist their parameters beside the data, the read/append paths default
-# to them, and an EXPLICIT parameter that contradicts the sidecar fails
-# loudly instead of corrupting.
+# Each layout persists its write-time parameters in its sidecar; probes and
+# appends resolve them through ``layout.open``, where an explicit parameter
+# that contradicts the sidecar fails loudly instead of probing or appending
+# into the wrong directories. The families here keep only their row
+# assignment (cell, bucket, band x bucket) and their probe.
 # --------------------------------------------------------------------------
 
-_ANN_META_FILE = "_ann_meta.json"
+
+def _auto_centroids(
+    df: DataFrame,
+    target_cell_rows: int,
+    n_rows: int | None,
+    refine_iters: int,
+    id_col: str,
+    vec_col: str,
+) -> list[tuple[int, list[float]]]:
+    """A coarse quantizer sized to the corpus: k = ceil(n /
+    target_cell_rows) cells seeded by ``sample_centroids`` and refined
+    with ``refine_iters`` Lloyd passes (``n_rows`` skips the bounded
+    count probe)."""
+    n = n_rows if n_rows is not None else _bounded_count(df)
+    k_cells = max(1, math.ceil(n / target_cell_rows))
+    centroids = sample_centroids(df, k_cells, id_col, vec_col)
+    if refine_iters > 0:
+        centroids = kmeans_refine(df, centroids, refine_iters, vec_col)
+    return centroids
 
 
-def _layout_meta_path(spark, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path, _ANN_META_FILE)
-
-
-def _write_layout_meta(spark, path: str, meta: dict) -> None:
-    """Persist layout parameters as an ``_ann_meta.json`` sidecar under
-    the layout root (underscore-prefixed, so Spark's file index treats it
-    as hidden metadata like ``_SUCCESS`` and scans never read it as
-    data). Written through the Hadoop FileSystem API, so the layout may
-    live on HDFS/S3/local alike — the sidecar rides the same filesystem
-    as the parquet it describes."""
-    p = _layout_meta_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    try:
-        out.write(json.dumps(meta, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
-
-
-def _read_layout_meta(spark, path: str) -> dict | None:
-    """Read the ``_ann_meta.json`` sidecar; None for a pre-sidecar
-    (legacy) layout, where read paths fall back to explicit params."""
-    p = _layout_meta_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _resolve_meta(
-    meta: dict | None,
-    kind: str,
-    path: str,
-    op: str,
-    **explicit,
-) -> dict:
-    """Merge explicit parameters with the sidecar: sidecar fills every
-    None; an explicit value that CONTRADICTS the sidecar raises (the
-    sidecar records what the directories physically are — probing or
-    appending under different parameters is never right); with no
-    sidecar every parameter must be explicit (legacy layout)."""
-    if meta is None:
-        missing = [k for k, v in explicit.items() if v is None]
-        if missing:
-            raise ValueError(
-                f"{op}: layout at {path!r} has no {_ANN_META_FILE} sidecar "
-                f"(pre-r10 layout?) and {missing} were not passed — supply "
-                "them explicitly, matching the original write."
-            )
-        return explicit
-    if meta.get("kind") != kind:
-        raise ValueError(
-            f"{op}: layout at {path!r} is kind={meta.get('kind')!r}, "
-            f"not {kind!r} — wrong reader for this layout."
-        )
-    resolved = {}
-    for key, val in explicit.items():
-        if val is None:
-            resolved[key] = meta.get(key)
-        elif key in meta and val != meta[key]:
-            raise ValueError(
-                f"{op}: explicit {key}={val!r} contradicts the layout's "
-                f"sidecar ({key}={meta[key]!r}) at {path!r} — a mismatched "
-                f"{key} would silently probe/append the wrong bucket "
-                "directories. Drop the override (the sidecar is "
-                "authoritative) or rewrite the layout."
-            )
-        else:
-            resolved[key] = val
-    return resolved
-
-
-def _guard_reserved_cols(df: DataFrame, op: str, reserved: tuple[str, ...]) -> None:
-    """Fail fast when an input column collides with a layout-internal
-    column the writer is about to assign with ``withColumn`` — the
-    silent alternative drops user data into the layout (ADVICE r11; the
-    same contract ``write_ann_banded`` enforces for band/bucket)."""
-    clashes = [c for c in df.columns if c in reserved]
-    if clashes:
-        raise ValueError(
-            f"{op}: input columns {clashes} collide with the layout's "
-            f"internal columns {list(reserved)} — the writer would "
-            "silently overwrite them. Rename them before writing."
-        )
+def _cells(meta: dict) -> list[tuple[int, list[float]]]:
+    """The centroid list of an IVF-family sidecar."""
+    return [(int(c), list(v)) for c, v in meta["centroids"]]
 
 
 def write_ivf_partitioned(
@@ -931,14 +860,13 @@ def write_ivf_partitioned(
     refine_iters: int = 1,
     id_col: str = "vec_id",
 ) -> None:
-    """Materialize the IVF layout: the corpus parquet-partitioned by cell
-    id (the coarse-quantizer assignment baked into the plan as literals —
-    a narrow map, no shuffle beyond the write). The centroid list is
-    persisted beside the data (``_ann_meta.json``), so probes and
-    appends default to the EXACT quantizer the directories were built
-    with. New batches can ``.write.mode("append")`` through
-    ``ivf_assign`` with the same centroids — untouched cells are never
-    rewritten.
+    """Materialize the IVF layout (kind ``ivf``): the corpus
+    parquet-partitioned by cell id (the coarse-quantizer assignment baked
+    into the plan as literals — a narrow map, no shuffle beyond the
+    write). The centroid list and ``vec_col`` are recorded in the
+    layout's sidecar, so probes and appends default to the EXACT
+    quantizer the directories were built with; untouched cells are never
+    rewritten by an append. An input ``cell`` column is rejected.
 
     ``centroids=None`` (default) trains the coarse quantizer at write
     time with the cell count SIZED TO THE CORPUS — k =
@@ -951,27 +879,16 @@ def write_ivf_partitioned(
     shrinking fraction, the same law `_auto_planes` applies to the LSH
     twin. Pass ``n_rows`` from catalog statistics at scale to skip the
     bounded count probe."""
-    _guard_reserved_cols(df, "write_ivf_partitioned", ("cell",))
     if centroids is None:
-        n = n_rows if n_rows is not None else _bounded_count(df)
-        k_cells = max(1, math.ceil(n / target_cell_rows))
-        centroids = sample_centroids(df, k_cells, id_col, vec_col)
-        if refine_iters > 0:
-            centroids = kmeans_refine(df, centroids, refine_iters, vec_col)
-    (
-        ivf_assign(df, centroids, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    _write_layout_meta(
-        df.sparkSession,
+        centroids = _auto_centroids(
+            df, target_cell_rows, n_rows, refine_iters, id_col, vec_col
+        )
+    L.write(
+        L.IVF,
+        df,
         path,
-        {
-            "kind": "ivf",
-            "centroids": _centroids_jsonable(centroids),
-            "vec_col": vec_col,
-        },
+        lambda d: ivf_assign(d, centroids, vec_col),
+        {"centroids": _centroids_jsonable(centroids), "vec_col": vec_col},
     )
 
 
@@ -998,44 +915,30 @@ def append_ivf_partitioned(
     untouched cells are never rewritten), the IVF twin of
     ``append_ann_bucketed``.
 
-    ``centroids``/``vec_col`` default to the layout's ``_ann_meta.json``
-    sidecar — the quantizer the directories were physically built with —
-    and an explicit list that CONTRADICTS the sidecar raises: appending
-    vectors assigned under a different quantizer would corrupt every
-    probe of the layout forever after, silently. For a pre-sidecar
-    (legacy) layout both must be passed explicitly, and a successful
-    append stamps the sidecar."""
-    _guard_reserved_cols(df, "append_ivf_partitioned", ("cell",))
-    spark = df.sparkSession
-    meta = _read_layout_meta(spark, path)
-    explicit = (
-        _centroids_jsonable(centroids) if centroids is not None else None
-    )
-    resolved = _resolve_meta(
-        meta,
-        "ivf",
+    ``centroids``/``vec_col`` default to the layout's sidecar — the
+    quantizer the directories were physically built with — and an
+    explicit list that CONTRADICTS the sidecar raises: appending vectors
+    assigned under a different quantizer would corrupt every probe of the
+    layout forever after, silently. For a pre-sidecar (legacy) layout
+    both must be passed explicitly, and a successful append stamps the
+    sidecar."""
+    op = "append_ivf_partitioned"
+    meta = L.open(
+        df.sparkSession,
+        L.IVF,
         path,
-        "append_ivf_partitioned",
-        centroids=explicit,
+        op,
+        centroids=None if centroids is None else _centroids_jsonable(centroids),
         vec_col=vec_col,
     )
-    cents = [(int(c), list(v)) for c, v in resolved["centroids"]]
-    (
-        ivf_assign(df, cents, resolved["vec_col"])
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
+    L.append(
+        L.IVF,
+        df,
+        path,
+        lambda d: ivf_assign(d, _cells(meta), meta["vec_col"]),
+        meta,
+        op,
     )
-    if meta is None:
-        _write_layout_meta(
-            spark,
-            path,
-            {
-                "kind": "ivf",
-                "centroids": _centroids_jsonable(cents),
-                "vec_col": resolved["vec_col"],
-            },
-        )
 
 
 def ivf_topk_at_rest(
@@ -1060,23 +963,17 @@ def ivf_topk_at_rest(
     contradicts the sidecar raises rather than silently probing the
     wrong cells or scoring a co-existing vector column. For a
     pre-sidecar (legacy) layout both must be passed explicitly."""
-    meta = _read_layout_meta(spark, path)
-    explicit = (
-        _centroids_jsonable(centroids) if centroids is not None else None
-    )
-    resolved = _resolve_meta(
-        meta,
-        "ivf",
+    meta = L.open(
+        spark,
+        L.IVF,
         path,
         "ivf_topk_at_rest",
-        centroids=explicit,
+        centroids=None if centroids is None else _centroids_jsonable(centroids),
         vec_col=vec_col,
     )
-    vec_col = resolved["vec_col"]
-    cents = [(int(c), list(v)) for c, v in resolved["centroids"]]
-    probes = ivf_probes(query_vec, cents, n_probe)
+    probes = ivf_probes(query_vec, _cells(meta), n_probe)
     candidates = spark.read.parquet(path).filter(F.col("cell").isin(probes))
-    return _ivf_score_probed(candidates, query_vec, k, id_col, vec_col)
+    return _ivf_score_probed(candidates, query_vec, k, id_col, meta["vec_col"])
 
 
 def query_probes(
@@ -1149,9 +1046,10 @@ def write_ann_bucketed(
     target_bucket_rows: int = 4096,
     n_rows: int | None = None,
 ) -> None:
-    """Materialize the ANN layout the LSH docstrings promise: the corpus
-    parquet-partitioned BY BUCKET ID, so a probed query prunes whole
-    partitions at the scan instead of filtering after reading 100 TB.
+    """Materialize the ANN layout the LSH docstrings promise (kind
+    ``lsh``): the corpus parquet-partitioned BY BUCKET ID, so a probed
+    query prunes whole partitions at the scan instead of filtering after
+    reading 100 TB.
 
     The bucket assignment is the same deterministic md5-plane function
     the on-the-fly path uses, so a corpus written once keeps serving the
@@ -1161,25 +1059,20 @@ def write_ann_bucketed(
     ~``target_bucket_rows`` at ANY corpus size (pass ``n_rows`` from
     catalog statistics at scale to skip the bounded probe) — the r9
     fixed-4 default made partitions grow linearly with the corpus. The
-    chosen ``num_planes``/``seed``/``dim``/``vec_col`` are persisted
-    beside the data (``_ann_meta.json``), so probes and appends default
-    to the EXACT plane-set the directories were built with."""
+    chosen ``num_planes``/``seed``/``dim``/``vec_col`` are recorded in
+    the layout's sidecar, so probes and appends default to the EXACT
+    plane-set the directories were built with."""
     if num_planes is None:
         num_planes = _auto_planes(
             n_rows if n_rows is not None else _bounded_count(df),
             target_bucket_rows,
         )
-    (
-        lsh_bucket_assign(df, dim, num_planes, seed, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    _write_layout_meta(
-        df.sparkSession,
+    L.write(
+        L.LSH,
+        df,
         path,
+        lambda d: lsh_bucket_assign(d, dim, num_planes, seed, vec_col),
         {
-            "kind": "lsh",
             "num_planes": int(num_planes),
             "seed": int(seed),
             "dim": int(dim),
@@ -1202,49 +1095,27 @@ def append_ann_bucketed(
     costs writes proportional to the batch, not the index.
 
     ``num_planes``/``seed``/``dim``/``vec_col`` default to the layout's
-    ``_ann_meta.json`` sidecar — the plane-set the directories were
-    physically built with — and an explicit value that CONTRADICTS the
-    sidecar raises: appending vectors bucketed under different planes
-    would corrupt every probe of the layout forever after, silently.
-    For a pre-sidecar (legacy) layout all four must be passed explicitly,
-    and a successful append stamps the sidecar so the layout is
-    self-describing from then on."""
-    spark = df.sparkSession
-    meta = _read_layout_meta(spark, path)
-    resolved = _resolve_meta(
-        meta,
-        "lsh",
+    sidecar — the plane-set the directories were physically built with —
+    and an explicit value that CONTRADICTS the sidecar raises: appending
+    vectors bucketed under different planes would corrupt every probe of
+    the layout forever after, silently. For a pre-sidecar (legacy)
+    layout all four must be passed explicitly, and a successful append
+    stamps the sidecar so the layout is self-describing from then on."""
+    op = "append_ann_bucketed"
+    m = L.open(
+        df.sparkSession, L.LSH, path, op,
+        dim=dim, num_planes=num_planes, seed=seed, vec_col=vec_col,
+    )
+    L.append(
+        L.LSH,
+        df,
         path,
-        "append_ann_bucketed",
-        dim=dim,
-        num_planes=num_planes,
-        seed=seed,
-        vec_col=vec_col,
+        lambda d: lsh_bucket_assign(
+            d, m["dim"], m["num_planes"], m["seed"], m["vec_col"]
+        ),
+        m,
+        op,
     )
-    (
-        lsh_bucket_assign(
-            df,
-            resolved["dim"],
-            resolved["num_planes"],
-            resolved["seed"],
-            resolved["vec_col"],
-        )
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    if meta is None:
-        _write_layout_meta(
-            spark,
-            path,
-            {
-                "kind": "lsh",
-                "num_planes": int(resolved["num_planes"]),
-                "seed": int(resolved["seed"]),
-                "dim": int(resolved["dim"]),
-                "vec_col": resolved["vec_col"],
-            },
-        )
 
 
 def ann_topk_at_rest(
@@ -1266,28 +1137,17 @@ def ann_topk_at_rest(
     on-the-fly ``ann_topk`` with the same parameters by construction
     (same planes, same probes, same scoring/ordering).
 
-    ``num_planes``/``seed``/``vec_col`` default to the layout's
-    ``_ann_meta.json`` sidecar — the plane-set the directories were
-    physically built with — and an explicit value that CONTRADICTS the
-    sidecar raises rather than silently probing the wrong directories
-    and returning confidently wrong neighbors. For a pre-sidecar
-    (legacy) layout all three must be passed explicitly."""
-    meta = _read_layout_meta(spark, path)
-    resolved = _resolve_meta(
-        meta,
-        "lsh",
-        path,
-        "ann_topk_at_rest",
-        num_planes=num_planes,
-        seed=seed,
-        vec_col=vec_col,
+    ``num_planes``/``seed``/``vec_col`` default to the layout's sidecar —
+    the plane-set the directories were physically built with — and an
+    explicit value that CONTRADICTS the sidecar raises rather than
+    silently probing the wrong directories and returning confidently
+    wrong neighbors. For a pre-sidecar (legacy) layout all three must be
+    passed explicitly."""
+    m = L.open(
+        spark, L.LSH, path, "ann_topk_at_rest",
+        num_planes=num_planes, seed=seed, vec_col=vec_col,
     )
-    num_planes, seed, vec_col = (
-        resolved["num_planes"],
-        resolved["seed"],
-        resolved["vec_col"],
-    )
-    probes = query_probes(query_vec, num_planes, probe_adjacent, seed)
+    probes = query_probes(query_vec, m["num_planes"], probe_adjacent, m["seed"])
     candidates = spark.read.parquet(path).filter(
         F.col("bucket").isin(*probes)
     )
@@ -1295,7 +1155,7 @@ def ann_topk_at_rest(
     return (
         candidates.select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
+            F.round(cosine(F.col(m["vec_col"]), q), 6).alias("cosine_sim"),
             F.col("bucket").cast("int").alias("bucket"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
@@ -1327,8 +1187,10 @@ def write_ann_banded(
 
     ``planes_per_band=None`` auto-sizes the code (`_auto_planes`) so
     expected per-(band,bucket) rows stay ~``target_bucket_rows`` at any
-    corpus size. Parameters persist in the ``_ann_meta.json`` sidecar;
-    probes resolve them from it (``knn_join_lsh_banded_at_rest``).
+    corpus size. Parameters are recorded in the layout's sidecar (kind
+    ``lsh_banded``); probes resolve them from it
+    (``knn_join_lsh_banded_at_rest``). Input columns ``band``/``bucket``/
+    ``_band_code_*`` are rejected.
 
     Sizing note: at-rest buckets are parquet FILES, so
     ``target_bucket_rows`` here is an I/O knob, NOT the on-the-fly
@@ -1340,34 +1202,17 @@ def write_ann_banded(
     count per query per band equals the LAYOUT's bucket occupancy, so a
     coarser at-rest bucket trades a little more verify work for
     scan-sized files — the right trade on any real filesystem."""
-    clashes = [
-        c
-        for c in df.columns
-        if c in ("band", "bucket") or c.startswith("_band_code_")
-    ]
-    if clashes:
-        raise ValueError(
-            f"write_ann_banded: input columns {clashes} collide with the "
-            "layout's partition columns ('band', 'bucket') or its internal "
-            "'_band_code_*' scratch columns — rename them before writing, "
-            "or the layout would be ambiguous/corrupted."
-        )
     if planes_per_band is None:
         planes_per_band = _auto_planes(
             n_rows if n_rows is not None else _bounded_count(df),
             target_bucket_rows,
         )
-    (
-        _banded_exploded(df, dim, bands, planes_per_band, seed, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("band", "bucket")
-        .parquet(path)
-    )
-    _write_layout_meta(
-        df.sparkSession,
+    L.write(
+        L.LSH_BANDED,
+        df,
         path,
+        lambda d: _banded_exploded(d, dim, bands, planes_per_band, seed, vec_col),
         {
-            "kind": "lsh_banded",
             "bands": int(bands),
             "planes_per_band": int(planes_per_band),
             "seed": int(seed),
@@ -1414,42 +1259,24 @@ def append_ann_banded(df: DataFrame, path: str) -> None:
     bands × batch, not the index. The banded twin of
     ``append_ann_bucketed`` / ``append_ivf_partitioned``.
 
-    All parameters resolve from the layout's ``_ann_meta.json`` sidecar
-    (the plane-sets the directories were physically built with — there
-    is no explicit-parameter form: a banded layout is only ever built by
+    All parameters resolve from the layout's sidecar (the plane-sets the
+    directories were physically built with — there is no
+    explicit-parameter form: a banded layout is only ever built by
     ``write_ann_banded``, which always stamps the sidecar). The same
     reserved-column guard as the write path applies. Accumulated append
     files fold back to scan-sized ones with :func:`compact_layout`."""
-    meta = _read_layout_meta(df.sparkSession, path)
-    if meta is None or meta.get("kind") != "lsh_banded":
-        raise ValueError(
-            f"append_ann_banded: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'lsh_banded' — write it with write_ann_banded first."
-        )
-    clashes = [
-        c
-        for c in df.columns
-        if c in ("band", "bucket") or c.startswith("_band_code_")
-    ]
-    if clashes:
-        raise ValueError(
-            f"append_ann_banded: input columns {clashes} collide with the "
-            "layout's partition columns ('band', 'bucket') or its internal "
-            "'_band_code_*' scratch columns — rename them before appending."
-        )
-    (
-        _banded_exploded(
-            df,
-            meta["dim"],
-            meta["bands"],
-            meta["planes_per_band"],
-            meta["seed"],
-            meta["vec_col"],
-        )
-        .write.mode("append")
-        .partitionBy("band", "bucket")
-        .parquet(path)
+    op = "append_ann_banded"
+    m = L.open(df.sparkSession, L.LSH_BANDED, path, op)
+    L.append(
+        L.LSH_BANDED,
+        df,
+        path,
+        lambda d: _banded_exploded(
+            d, m["dim"], m["bands"], m["planes_per_band"], m["seed"],
+            m["vec_col"],
+        ),
+        m,
+        op,
     )
 
 
@@ -1476,8 +1303,8 @@ def knn_join_lsh_banded_at_rest(
     the same boundedness `ann_topk_at_rest` assumes for its single
     query). For corpus×corpus joins use the on-the-fly
     ``knn_join_lsh_banded``, which keeps both sides distributed. All
-    layout parameters resolve from the ``_ann_meta.json`` sidecar — the
-    plane-sets the directories were physically built with.
+    layout parameters resolve from the layout's sidecar — the plane-sets
+    the directories were physically built with.
 
     Stage shape: ONE evaluation of the query plan — a single collect
     pulls each query's id, vector, AND all band codes, so the probe set
@@ -1493,13 +1320,7 @@ def knn_join_lsh_banded_at_rest(
     the on-the-fly twin."""
     from pyspark.sql import Window
 
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "lsh_banded":
-        raise ValueError(
-            f"knn_join_lsh_banded_at_rest: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'lsh_banded' — write it with write_ann_banded first."
-        )
+    meta = L.open(spark, L.LSH_BANDED, path, "knn_join_lsh_banded_at_rest")
     bands, planes = meta["bands"], meta["planes_per_band"]
     seed, dim = meta["seed"], meta["dim"]
     right_id, vec_col = meta["id_col"], meta["vec_col"]
@@ -1683,88 +1504,14 @@ def brute_force_topk_vectorized(
 #
 # Appends assign under the frozen write-time quantizer/plane-set forever;
 # under corpus drift the cells/buckets skew — probe cost and recall both
-# decay — and appended files accumulate. The lifecycle tools close the
-# loop: layout_stats/layout_skew_report detect the skew from metadata-cheap
-# scans, and retrain_ivf_layout re-runs Lloyd at the CURRENT corpus and
-# rewrites the layout (sidecar version bump, Hadoop-FS dir swap), restoring
-# the fresh-write probe behavior without a driver-side byte ever moving.
+# decay — and appended files accumulate. ``layout_stats`` /
+# ``layout_skew_report`` (footer-only scans) detect the skew and
+# ``compact_layout`` folds the files, for every layout kind (all three
+# live in io/layout.py). ``retrain_ivf_layout`` re-runs Lloyd at the
+# CURRENT corpus and rewrites the layout (quantizer ``version`` bump,
+# Hadoop-FS dir swap), restoring the fresh-write probe behavior without a
+# driver-side byte ever moving.
 # --------------------------------------------------------------------------
-
-_LAYOUT_PART_COLS = {
-    "ivf": ["cell"],
-    "ivf_pq": ["cell"],
-    "lsh": ["bucket"],
-    "lsh_banded": ["band", "bucket"],
-    # the text-dedup layout (operators/dedup.py write_minhash_bands):
-    # band table partitioned by band ordinal; shingle table unpartitioned
-    "minhash_bands": ["band_idx"],
-    "minhash_shingles": [],
-}
-
-
-def layout_stats(spark, path: str) -> DataFrame:
-    """Rows per partition (cell for IVF, bucket for LSH, (band, bucket)
-    for banded) of an at-rest ANN layout — the health report appends
-    slowly degrade. Metadata-cheap: the aggregate references only
-    partition columns (values come from directory names) so the scan
-    reads parquet FOOTERS for row counts, never data pages. Columns:
-    the layout's partition column(s) + ``n_rows``."""
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") not in _LAYOUT_PART_COLS:
-        raise ValueError(
-            f"layout_stats: {path!r} has no recognizable {_ANN_META_FILE} "
-            "sidecar — not an at-rest ANN layout (or pre-r10; rewrite it)."
-        )
-    part_cols = _LAYOUT_PART_COLS[meta["kind"]]
-    try:
-        scan = spark.read.parquet(path)
-    except Exception:
-        # a layout written from an empty frame has a sidecar but no
-        # parquet files — zero partitions, not a crash (ADVICE r11)
-        schema = (
-            ", ".join(f"{c} int" for c in part_cols) + ", n_rows bigint"
-            if part_cols
-            else "n_rows bigint"
-        )
-        return spark.createDataFrame([], schema)
-    out = scan.groupBy(*part_cols).agg(F.count(F.lit(1)).alias("n_rows"))
-    return out.orderBy(*part_cols) if part_cols else out
-
-
-def layout_skew_report(spark, path: str) -> dict:
-    """Driver-side summary of :func:`layout_stats` (bounded collect — one
-    row per cell/bucket): partition count, row count, min/max/mean rows
-    per partition, and ``skew`` = max/mean. A healthy layout sits near
-    skew 1-3; drifted appends push it up (every new vector landing in a
-    few hot cells), which is the retrain signal — at 100 TB this costs a
-    footer-only scan, so it can run after every append batch."""
-    rows = layout_stats(spark, path).select("n_rows").collect()
-    counts = [r["n_rows"] for r in rows]
-    kind = _read_layout_meta(spark, path)["kind"]
-    if not counts:
-        # an empty layout (unbounded delete, empty write) is a
-        # degenerate-but-valid state: report it, don't crash on min()/
-        # max()/divide-by-zero (ADVICE r11)
-        return {
-            "kind": kind,
-            "n_partitions": 0,
-            "n_rows": 0,
-            "min_rows": None,
-            "max_rows": None,
-            "mean_rows": None,
-            "skew": None,
-        }
-    total = sum(counts)
-    mean = total / len(counts)
-    return {
-        "kind": kind,
-        "n_partitions": len(counts),
-        "n_rows": total,
-        "min_rows": min(counts),
-        "max_rows": max(counts),
-        "mean_rows": mean,
-        "skew": max(counts) / mean,
-    }
 
 
 def retrain_ivf_layout(
@@ -1780,139 +1527,41 @@ def retrain_ivf_layout(
     directories, exactly as a fresh ``write_ivf_partitioned`` of the
     accumulated corpus would — deterministic seeding makes the two
     byte-equivalent in probe behavior. The rewrite lands in a sibling tmp
-    dir and swaps in via Hadoop FS renames (same contract as
-    ``io.writers.compact_small_files``), so it runs on HDFS/S3/local.
+    dir and swaps in via Hadoop FS renames (``layout.rewrite``, the same
+    contract as ``io.writers.compact_small_files``), so it runs on
+    HDFS/S3/local.
 
-    The new sidecar bumps ``version``: any reader/appender still holding
-    the OLD quantizer as an explicit parameter now CONTRADICTS the
-    sidecar and fails loudly (``_resolve_meta``) instead of probing cells
-    that no longer exist — the same guard that protects mismatched
-    appends. Returns ``{"k_cells", "version", "n_rows"}``."""
-    from etl_data_spark.io.writers import _delete, _rename
+    The new sidecar bumps the quantizer ``version`` (a separate field
+    from the layout ``format_version``): any reader/appender still
+    holding the OLD quantizer as an explicit parameter now CONTRADICTS
+    the sidecar and fails loudly instead of probing cells that no longer
+    exist — the same guard that protects mismatched appends. Returns
+    ``{"k_cells", "version", "n_rows"}``."""
 
-    tmp = path.rstrip("/") + "__retrain"
-    trash = path.rstrip("/") + "__pre_retrain"
-    _heal_crashed_swap(spark, path, trash)  # crashed prior retrain
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "ivf":
-        raise ValueError(
-            f"retrain_ivf_layout: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'ivf' — only IVF layouts retrain (LSH planes are data-"
-            "independent; rewrite with write_ann_bucketed to re-size)."
+    def build(tmp: str) -> dict:
+        meta = L.open(spark, L.IVF, path, "retrain_ivf_layout")
+        corpus = spark.read.parquet(path).drop("cell")
+        n = _bounded_count(corpus)
+        write_ivf_partitioned(
+            corpus,
+            tmp,
+            centroids=None,
+            vec_col=meta["vec_col"],
+            target_cell_rows=target_cell_rows,
+            n_rows=n,
+            refine_iters=refine_iters,
+            id_col=id_col,
         )
-    vec_col = meta["vec_col"]
-    corpus = spark.read.parquet(path).drop("cell")
-    n = _bounded_count(corpus)
-    fs, _ = _fs_of(spark, path)
-    _delete(fs, spark, tmp)
-    write_ivf_partitioned(
-        corpus,
-        tmp,
-        centroids=None,
-        vec_col=vec_col,
-        target_cell_rows=target_cell_rows,
-        n_rows=n,
-        refine_iters=refine_iters,
-        id_col=id_col,
-    )
-    new_meta = _read_layout_meta(spark, tmp)
-    new_meta["version"] = int(meta.get("version", 1)) + 1
-    _write_layout_meta(spark, tmp, new_meta)
-    _delete(fs, spark, trash)
-    _rename(fs, spark, path, trash)
-    _rename(fs, spark, tmp, path)
-    _delete(fs, spark, trash)
-    return {
-        "k_cells": len(new_meta["centroids"]),
-        "version": new_meta["version"],
-        "n_rows": n,
-    }
+        new_meta = L.read_meta(spark, tmp)
+        new_meta["version"] = int(meta.get("version", 1)) + 1
+        L.write_meta(spark, tmp, new_meta)
+        return {
+            "k_cells": len(new_meta["centroids"]),
+            "version": new_meta["version"],
+            "n_rows": n,
+        }
 
-
-def _fs_of(spark, path: str):
-    """Hadoop FileSystem for ``path`` (shared shape with io.writers._fs)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _heal_crashed_swap(spark, path: str, trash: str) -> None:
-    """Crash healing for the two-rename layout swaps (compact/retrain):
-    a crash BETWEEN the renames leaves the layout only at its trash
-    sibling — restore it before reading instead of raising 'no
-    recognizable sidecar' (ADVICE r11; mirrors
-    ``io.writers.compact_small_files``). A trash whose live twin exists
-    is a post-swap leftover and is left for the caller's own
-    ``_delete(trash)`` to clear."""
-    from etl_data_spark.io.writers import _rename
-
-    fs, jp = _fs_of(spark, path)
-    if not fs.exists(jp) and fs.exists(
-        spark._jvm.org.apache.hadoop.fs.Path(trash)
-    ):
-        _rename(fs, spark, trash, path)
-
-
-def compact_layout(
-    spark,
-    path: str,
-    target_files_per_partition: int = 1,
-) -> int:
-    """Compact an at-rest ANN layout's accumulated append files.
-
-    Every ``append_*`` batch adds at least one file per touched
-    cell/bucket directory; after months of appends a directory holds
-    hundreds of tiny files and the probed scan drowns in per-file
-    overhead (one task + one object-store request each — the same
-    failure mode ``io.writers.compact_small_files`` fixes for month
-    partitions, measured in SCALE.md §30's bucket-sizing lesson). This
-    rewrites the layout into ``target_files_per_partition`` files per
-    partition directory, preserving the partition columns (so pruning
-    is unaffected) AND the ``_ann_meta.json`` sidecar byte-for-byte
-    (same quantizer/planes — compaction moves bytes, never assignments;
-    probe results are identical before and after). The rewrite lands in
-    a sibling tmp dir and swaps in via Hadoop FS renames (atomicity
-    contract: io/writers.py module docstring). Returns the number of
-    data files after compaction.
-
-    For a SKEWED layout prefer :func:`retrain_ivf_layout` (IVF) or a
-    fresh auto-sized ``write_ann_bucketed`` (LSH) — compaction fixes
-    file counts, not assignment quality."""
-    from etl_data_spark.io.writers import (
-        _count_parquet_files,
-        _delete,
-        _rename,
-    )
-
-    tmp = path.rstrip("/") + "__tmp_compact"
-    trash = path.rstrip("/") + "__pre_compact"
-    _heal_crashed_swap(spark, path, trash)  # crashed prior compact
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") not in _LAYOUT_PART_COLS:
-        raise ValueError(
-            f"compact_layout: {path!r} has no recognizable {_ANN_META_FILE} "
-            "sidecar — not an at-rest ANN layout (for month-partitioned "
-            "tables use io.writers.compact_small_files)."
-        )
-    part_cols = _LAYOUT_PART_COLS[meta["kind"]]
-    df = spark.read.parquet(path)
-    fs, _ = _fs_of(spark, path)
-    _delete(fs, spark, tmp)
-    if part_cols:
-        writer = df.repartition(
-            target_files_per_partition, *[F.col(c) for c in part_cols]
-        ).write.mode("overwrite").partitionBy(*part_cols)
-    else:  # unpartitioned layout table (e.g. minhash_shingles)
-        writer = df.coalesce(target_files_per_partition).write.mode(
-            "overwrite"
-        )
-    writer.parquet(tmp)
-    _write_layout_meta(spark, tmp, meta)  # sidecar rides the swap unchanged
-    _delete(fs, spark, trash)
-    _rename(fs, spark, path, trash)
-    _rename(fs, spark, tmp, path)
-    _delete(fs, spark, trash)
-    return _count_parquet_files(fs, spark, path)
+    return L.rewrite(spark, path, "retrain", build)
 
 
 # --------------------------------------------------------------------------
@@ -1938,7 +1587,8 @@ def _cell_pair_dots_pdf(pdf):
 
     Pairs across rows of DIFFERENT vector lengths are dropped (the JVM
     ``zip_with`` pads with NULL, so such pairs always score NULL and are
-    filtered); same-length subgroups are processed independently.
+    filtered); same-length subgroups are processed independently. Rows
+    whose two ids are equal (a duplicate id in one cell) are dropped.
     """
     import numpy as np
     import pandas as pd
@@ -1987,7 +1637,10 @@ def _cell_pair_dots_pdf(pdf):
                 "dot": pd.Series(dtype="float64"),
             }
         )
-    return pd.concat(out, ignore_index=True)
+    pairs = pd.concat(out, ignore_index=True)
+    # an id stored twice in one cell (e.g. re-appended) must not pair with
+    # itself — the join-form twin filters id_l != id_r the same way
+    return pairs[pairs["id_a"] != pairs["id_b"]]
 
 
 def _cell_pair_dots(
@@ -2088,11 +1741,9 @@ def semantic_dedup_pairs(
     bit-identical to the join form (r14 A/B: exceptAll both ways = 0 on
     the full sf0.1 corpus)."""
     if centroids is None:
-        n = n_rows if n_rows is not None else _bounded_count(df)
-        k_cells = max(1, math.ceil(n / target_cell_rows))
-        centroids = sample_centroids(df, k_cells, id_col, vec_col)
-        if refine_iters > 0:
-            centroids = kmeans_refine(df, centroids, refine_iters, vec_col)
+        centroids = _auto_centroids(
+            df, target_cell_rows, n_rows, refine_iters, id_col, vec_col
+        )
     assigned = (
         ivf_assign(df, centroids, vec_col)
         .select(id_col, vec_col, "cell")
@@ -2147,13 +1798,7 @@ def semantic_dedup_pairs_at_rest(
     cells, same exact cosine verify). The layout the retrain/compact
     lifecycle already maintains for ANN serving doubles as the semantic
     dedup index — one artifact, two consumers."""
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "ivf":
-        raise ValueError(
-            f"semantic_dedup_pairs_at_rest: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'ivf' — write it with write_ivf_partitioned first."
-        )
+    meta = L.open(spark, L.IVF, path, "semantic_dedup_pairs_at_rest")
     vec_col = meta["vec_col"]
     # same once-per-row norm discipline as semantic_dedup_pairs; r14:
     # the cell self-join (TWO scans of the layout) becomes one scan +
@@ -2194,21 +1839,14 @@ def semantic_dedup_incremental_at_rest(
     broadcast-join shape — the whole point of the incremental path — for
     a faster scorer on a pair set that is already delta-bounded."""
     spark = delta.sparkSession
-    meta = _read_layout_meta(spark, path)
-    if meta is None or meta.get("kind") != "ivf":
-        raise ValueError(
-            f"semantic_dedup_incremental_at_rest: layout at {path!r} is "
-            f"kind={None if meta is None else meta.get('kind')!r}, not "
-            "'ivf' — write it with write_ivf_partitioned first."
-        )
+    meta = L.open(spark, L.IVF, path, "semantic_dedup_incremental_at_rest")
     from pyspark.storagelevel import StorageLevel
 
     from etl_data_spark.caching import pin
 
     vec_col = meta["vec_col"]
-    cents = [(int(c), list(v)) for c, v in meta["centroids"]]
     d = pin(
-        ivf_assign(delta, cents, vec_col)
+        ivf_assign(delta, _cells(meta), vec_col)
         .select(id_col, vec_col, "cell")
         .withColumn("_n", norm(F.col(vec_col))),
         StorageLevel.MEMORY_AND_DISK,

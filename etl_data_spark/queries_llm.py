@@ -1417,8 +1417,8 @@ def _throwaway_layout_dir(prefix: str) -> str:
     _ANN_LSH_TOPK_SQL,
     doc="ann_lsh_topk served from a write_ann_bucketed layout: the corpus "
     "parquet-partitioned by bucket id, probes pruned at the file index "
-    "(PartitionFilters); parameters resolve from the _ann_meta.json "
-    "sidecar. Row-identical to ann_lsh_topk, hash-verified by its oracle.",
+    "(PartitionFilters); parameters resolve from the layout's sidecar. "
+    "Row-identical to ann_lsh_topk, hash-verified by its oracle.",
 )
 def q_ann_lsh_topk_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")

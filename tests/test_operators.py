@@ -813,8 +813,8 @@ def test_ann_at_rest_incremental_append(spark, tmp_path):
     append passes NO plane parameters: they resolve from the sidecar,
     which is exactly how a batch job appending to a layout it didn't
     write stays consistent with it."""
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ann_topk_at_rest,
         append_ann_bucketed,
         write_ann_bucketed,
@@ -829,7 +829,7 @@ def test_ann_at_rest_incremental_append(spark, tmp_path):
     write_ann_bucketed(e.filter(F.col("vec_id") < 100), path, dim=dim)
     append_ann_bucketed(e.filter(F.col("vec_id") >= 100), path)
 
-    meta = _read_layout_meta(spark, path)
+    meta = read_meta(spark, path)
     incr = ann_topk_at_rest(spark, path, qvec, k=10)
     fly = S.ann_topk(
         e, qvec, k=10, num_planes=meta["num_planes"], seed=meta["seed"]
@@ -877,8 +877,8 @@ def test_ann_layout_sidecar_self_describing(spark, tmp_path):
     wrong-kind reader is rejected outright."""
     import os
 
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ann_topk_at_rest,
         append_ann_bucketed,
         ivf_topk_at_rest,
@@ -892,7 +892,7 @@ def test_ann_layout_sidecar_self_describing(spark, tmp_path):
     path = str(tmp_path / "ann_meta")
     write_ann_bucketed(e, path, dim=dim)  # num_planes auto-sized
 
-    meta = _read_layout_meta(spark, path)
+    meta = read_meta(spark, path)
     assert meta["kind"] == "lsh" and meta["dim"] == dim
     planes, seed = meta["num_planes"], meta["seed"]
 
@@ -932,7 +932,7 @@ def test_ann_layout_sidecar_self_describing(spark, tmp_path):
         e.limit(0), path, dim=dim, num_planes=planes, seed=seed,
         vec_col="embedding",
     )
-    assert _read_layout_meta(spark, path)["num_planes"] == planes
+    assert read_meta(spark, path)["num_planes"] == planes
 
 
 def test_ivf_layout_sidecar_self_describing(spark, tmp_path):
@@ -1039,8 +1039,8 @@ def test_ivf_write_auto_trains_quantizer(spark, tmp_path):
     the default anyone inherits."""
     import math
 
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ivf_topk_at_rest,
         write_ivf_partitioned,
     )
@@ -1052,7 +1052,7 @@ def test_ivf_write_auto_trains_quantizer(spark, tmp_path):
     path = str(tmp_path / "ivf_auto")
     write_ivf_partitioned(e, path, target_cell_rows=64, n_rows=n)
 
-    meta = _read_layout_meta(spark, path)
+    meta = read_meta(spark, path)
     cents = [(int(c), list(v)) for c, v in meta["centroids"]]
     assert len(cents) == max(1, math.ceil(n / 64))
 
@@ -1830,8 +1830,8 @@ def test_ivf_layout_lifecycle_skew_and_retrain(spark, tmp_path):
     current corpus and rewrites the layout so probes equal a fresh-write
     layout's, the sidecar version bumps, and a reader still holding the
     OLD quantizer fails loudly."""
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ivf_topk_at_rest,
         layout_skew_report,
         layout_stats,
@@ -1868,7 +1868,7 @@ def test_ivf_layout_lifecycle_skew_and_retrain(spark, tmp_path):
 
     old_cents = [
         (int(c), list(v))
-        for c, v in _read_layout_meta(spark, path)["centroids"]
+        for c, v in read_meta(spark, path)["centroids"]
     ]
 
     # retrain: version bump + post-retrain probes equal a FRESH write of
@@ -1909,8 +1909,8 @@ def test_compact_layout_preserves_probes_and_sidecar(spark, tmp_path):
     bytes, never assignments)."""
     from pathlib import Path
 
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ann_topk_at_rest,
         append_ann_bucketed,
         compact_layout,
@@ -1931,7 +1931,7 @@ def test_compact_layout_preserves_probes_and_sidecar(spark, tmp_path):
             e.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20)), path
         )
     files_before = sum(1 for p in Path(path).rglob("*.parquet"))
-    meta_before = _read_layout_meta(spark, path)
+    meta_before = read_meta(spark, path)
     probe_before = [tuple(r) for r in ann_topk_at_rest(spark, path, qvec, k=10).collect()]
 
     n_after = compact_layout(spark, path, target_files_per_partition=1)
@@ -1940,7 +1940,7 @@ def test_compact_layout_preserves_probes_and_sidecar(spark, tmp_path):
     for d in Path(path).iterdir():
         if d.is_dir() and d.name.startswith("bucket="):
             assert sum(1 for p in d.rglob("*.parquet")) == 1, d
-    assert _read_layout_meta(spark, path) == meta_before
+    assert read_meta(spark, path) == meta_before
     probe_after = [tuple(r) for r in ann_topk_at_rest(spark, path, qvec, k=10).collect()]
     assert probe_after == probe_before
 
@@ -2075,8 +2075,8 @@ def test_ivfpq_at_rest(spark, tmp_path):
     row-for-row, and the rerank path serves exact distances from the
     same pruned scan."""
     import etl_data_spark.operators.pq as PQ
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.operators.similarity import (
-        _read_layout_meta,
         ivf_assign,
         ivf_probes,
         sample_centroids,
@@ -2091,7 +2091,7 @@ def test_ivfpq_at_rest(spark, tmp_path):
     books = PQ.train_pq(e, m=8, k=16, sample_rows=256, iters=3)
     path = str(tmp_path / "ivfpq")
     PQ.write_ivf_pq(e, path, centroids=cents, codebooks=books)
-    meta = _read_layout_meta(spark, path)
+    meta = read_meta(spark, path)
     assert meta["kind"] == "ivf_pq" and meta["has_vectors"]
     assert meta["encoding"] == "residual"  # r12 default: Jegou SIV
 
@@ -2118,7 +2118,7 @@ def test_ivfpq_at_rest(spark, tmp_path):
     PQ.write_ivf_pq(
         e, raw_path, centroids=cents, codebooks=books, residual=False
     )
-    assert _read_layout_meta(spark, raw_path)["encoding"] == "raw"
+    assert read_meta(spark, raw_path)["encoding"] == "raw"
     raw_fly_src = PQ.pq_encode(ivf_assign(e, cents), books).filter(
         F.col("cell").isin(probe_cells)
     )
@@ -2358,7 +2358,7 @@ def test_minhash_bands_sidecar_contract(spark, tmp_path):
     records the hash family so a probe never silently signs under a
     different one."""
     from etl_data_spark.operators import dedup as D
-    from etl_data_spark.operators.similarity import _read_layout_meta
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.queries import load_table
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -2367,7 +2367,7 @@ def test_minhash_bands_sidecar_contract(spark, tmp_path):
         d.filter(F.col("doc_id") < 100), path, num_hashes=32, bands=8,
         hash_impl="native",
     )
-    meta = _read_layout_meta(spark, path + "/bands")
+    meta = read_meta(spark, path + "/bands")
     assert meta["kind"] == "minhash_bands"
     assert (meta["num_hashes"], meta["bands"], meta["hash_impl"]) == (32, 8, "native")
 
@@ -2382,7 +2382,7 @@ def test_minhash_bands_sidecar_contract(spark, tmp_path):
         d.filter(F.col("doc_id") < 100), path2, target_recall=0.9,
         threshold=0.35,
     )
-    meta2 = _read_layout_meta(spark, path2 + "/bands")
+    meta2 = read_meta(spark, path2 + "/bands")
     r, b = D.minhash_auto_params(0.35, 0.9)
     assert (meta2["num_hashes"], meta2["bands"]) == (r * b, b)
 
@@ -2541,7 +2541,7 @@ def test_sq8_at_rest_layout(spark, tmp_path):
     from the same layout, write/append equivalence, reserved-column
     guard, and the wrong-kind rejection."""
     import etl_data_spark.operators.pq as PQ
-    from etl_data_spark.operators.similarity import _read_layout_meta
+    from etl_data_spark.io.layout import read_meta
     from etl_data_spark.queries import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -2553,7 +2553,7 @@ def test_sq8_at_rest_layout(spark, tmp_path):
     PQ.write_sq8(e.filter(F.col("vec_id") < 100), incr, bounds)
     PQ.append_sq8(e.filter(F.col("vec_id") >= 100), incr)
     PQ.write_sq8(e, full, bounds)
-    meta = _read_layout_meta(spark, incr)
+    meta = read_meta(spark, incr)
     assert meta["kind"] == "sq8" and meta["has_vectors"]
 
     got = PQ.sq8_topk_at_rest(spark, incr, qvec, k=10, shortlist=50)

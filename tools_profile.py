@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Round-13 optimization profiler: time named registry entries with the
-bench's exact methodology (noop sink, cache cleared, min-of-reps) and dump
-their .explain("formatted") plans to plans/r13/<name>_<tag>.txt.
+"""Optimization profiler: time named registry entries with the bench's
+exact methodology (noop sink, cache cleared, min-of-reps) and dump their
+.explain("formatted") plans to plans/<round>/<name>_<tag>.txt.
 
 Usage:
-    python tools_profile_r13.py before q1 q2 ...      # tag=before
-    python tools_profile_r13.py after  q1 q2 ...      # tag=after
-    python tools_profile_r13.py time   q1 q2 ...      # timings only, no plan
+    python tools_profile.py r15 before q1 q2 ...      # tag=before
+    python tools_profile.py r15 after  q1 q2 ...      # tag=after
+    python tools_profile.py r15 time   q1 q2 ...      # timings only, no plan
+
+The round tag (e.g. ``r15``) names the plan directory and the Spark app.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_BENCH_REPS (default 2).
@@ -20,17 +22,17 @@ import time
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    round_tag, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
 
     from etl_data_spark import get_spark, release_all
     from etl_data_spark.catalog import REGISTRY
 
-    spark = get_spark(app_name="profile-r13")
+    spark = get_spark(app_name=f"profile-{round_tag}")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs("plans/r13", exist_ok=True)
+    os.makedirs(f"plans/{round_tag}", exist_ok=True)
 
     # warm up the JVM once, untimed
     REGISTRY[names[0]].fn(spark, sf_dir).count()
@@ -57,7 +59,7 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(f"plans/r13/{name}_{tag}.txt", "w") as f:
+            with open(f"plans/{round_tag}/{name}_{tag}.txt", "w") as f:
                 f.write(plan)
 
     for name in names:
