@@ -93,6 +93,8 @@ MINHASH_BANDS = LayoutSpec(
         Table("shingles", stamp=MINHASH_SHINGLES),
     ),
     meta_sub="bands",
+    # 2: int64 band keys from one vectorized signing pass (1: string keys)
+    format_version=2,
 )
 GRAM_INDEX = LayoutSpec(
     "gram_index", "write_gram_index", (Table("grams", ("bucket",)),)

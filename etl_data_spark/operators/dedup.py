@@ -150,64 +150,26 @@ def base_hashes(shingle_col: str, impl: str = "md5") -> F.Column:
     return F.expr(f"transform({shingle_col}, s -> {expr})")
 
 
-def minhash_signature(hash_col: str, num_hashes: int = 64) -> F.Column:
-    """Array of ``num_hashes`` minimums over affine permutations of base
-    hashes. a*h < 2^62 stays in int64; the mod wraps ~2^31 times."""
-    mins = []
-    for i in range(num_hashes):
-        a, b = _affine_constants(i)
-        mins.append(
-            F.expr(
-                f"array_min(transform({hash_col}, "
-                f"h -> ({a}L * h + {b}L) % {MERSENNE_31}L))"
-            )
-        )
-    return F.array(*mins)
-
-
-
-def band_keys(sig_col: str, bands: int, rows_per_band: int) -> F.Column:
-    """Cut the signature into bands; key = band index + joined band values."""
-    return F.array(
-        *[
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                *[
-                    F.element_at(F.col(sig_col), b * rows_per_band + r + 1).cast(
-                        "string"
-                    )
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_banded(
     docs: DataFrame, num_hashes: int, bands: int, hash_impl: str = "md5"
 ) -> DataFrame:
-    """(doc_id, band) rows: MinHash signing + banding in ONE Arrow pass.
+    """(doc_id, band, band_idx) rows: MinHash signing + banding in ONE
+    Arrow pass — the only MinHash signing path, shared by the on-the-fly
+    pair operators and the at-rest band layout (write, append, probe).
 
-    r14 (guide §4.1/§4.2 — interpreted HOFs to vectorized native code):
-    the r13 form ran ``num_hashes`` separate interpreted
-    ``array_min(transform(...))`` walks per document plus a string
-    ``concat_ws`` per band, then exploded. Here the base-hash arrays
-    cross to the Python worker once per partition and numpy computes
-    every affine map + segment-min vectorized; the band key is an int64
-    mix of the band's minimums instead of a string (wrapping int64
-    arithmetic, deterministic). Key collisions can only MERGE buckets —
-    extra candidate pairs that exact-Jaccard verification discards — so
-    the verified output is identical for any key function, exactly the
-    argument that already covers ``hash_impl='native'``. Measured on
-    sf0.1 (H=64, B=16): dedup_minhash_lsh pair stage 1.94s -> 1.39s
-    warm, output byte-identical both ways.
-
-    The at-rest layout writers/probes (:func:`write_minhash_bands`
-    family) keep the r13 string keys: their key format is PERSISTED in
-    the band table and parsed for ``band_idx``, so layout and probe move
-    together or not at all.
+    The base-hash arrays cross to the Python worker once per partition
+    and numpy computes every affine map + segment-min vectorized (guide
+    §4.1/§4.2 — interpreted HOFs to vectorized native code), instead of
+    ``num_hashes`` interpreted ``array_min(transform(...))`` walks per
+    document. The band key is an int64 mix of the band's ordinal and its
+    minimums (wrapping int64 arithmetic, deterministic); ``band_idx`` is
+    the ordinal, the at-rest band table's partition key. Key collisions
+    can only MERGE buckets — extra candidate pairs that exact-Jaccard
+    verification discards — so the verified output is identical for any
+    key function, exactly the argument that already covers
+    ``hash_impl='native'``. The at-rest layout persists these int64 keys
+    (``minhash_bands`` format_version 2), so layout and probe always sign
+    through this one function.
     """
     rows_per_band = num_hashes // bands
     consts = [_affine_constants(i) for i in range(num_hashes)]
@@ -216,6 +178,7 @@ def minhash_banded(
     bh = docs.withColumn("bh", base_hashes("sh", hash_impl)).select(
         "doc_id", "bh"
     )
+    id_type = bh.schema["doc_id"].dataType.simpleString()
 
     def bandgen(batches):
         import numpy as np
@@ -224,11 +187,11 @@ def minhash_banded(
         av = np.array(a_consts, dtype=np.int64)
         bv = np.array(b_consts, dtype=np.int64)
         mixer = np.int64(1000003)
+        band_idx = np.arange(bands, dtype=np.int32)
         for tbl in batches:
             lst = tbl.column("bh")
             if len(lst) == 0:
                 continue
-            ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
             offsets = lst.offsets.to_numpy(zero_copy_only=False)
             values = lst.values.to_numpy(zero_copy_only=False)
             starts = offsets[:-1]
@@ -243,11 +206,19 @@ def minhash_banded(
                         mix = mix * mixer + np.minimum.reduceat(x, starts)
                     keys[:, b] = mix
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(ids, bands)), pa.array(keys.ravel())],
-                ["doc_id", "band"],
+                [
+                    tbl.column("doc_id").take(
+                        np.repeat(np.arange(ndocs), bands)
+                    ),
+                    pa.array(keys.ravel()),
+                    pa.array(np.tile(band_idx, ndocs)),
+                ],
+                ["doc_id", "band", "band_idx"],
             )
 
-    return bh.mapInArrow(bandgen, "doc_id long, band bigint")
+    return bh.mapInArrow(
+        bandgen, f"doc_id {id_type}, band bigint, band_idx int"
+    )
 
 
 def jaccard(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -258,6 +229,83 @@ def jaccard(a: str | F.Column, b: str | F.Column) -> F.Column:
     return F.when(union == 0, F.lit(0.0)).otherwise(
         inter.cast("double") / union.cast("double")
     )
+
+
+def _band_join(
+    left: DataFrame,
+    right: DataFrame | None,
+    keys: list[str],
+    payload: DataFrame,
+    score: F.Column,
+    hint: str | None = None,
+    directed: bool = False,
+    payload_b: DataFrame | None = None,
+) -> DataFrame:
+    """(id_a, id_b, score) — the LSH band join shared by every banded
+    near-dup operator, MinHash on text and hyperplane codes on vectors:
+    equi-join on the band-key columns ``keys``, self-pair exclusion,
+    cross-band distinct, exact-score join-back verify.
+
+    ``left``/``right`` hold (id, *keys) rows, the id first: one row per
+    document per band. ``right=None`` is a self-join whose ``id_a <
+    id_b`` join condition emits each pair once (never both orientations,
+    which would double the candidate shuffle). A probe (``right`` given)
+    pairs every left row with every right row but itself, as
+    ``(least, greatest)`` — or as directed ``(left, right)`` pairs with
+    ``directed=True`` (kNN). Only the two ids ride the band shuffle and
+    the distinct; the wide values join back ONCE from ``payload`` (a
+    two-column (id, value) frame; ``payload_b`` for the right side when
+    it differs) as ``<value>_a`` / ``<value>_b``, which ``score`` reads.
+    ``hint`` goes on both join-back sides (``"merge"`` where they are
+    corpus-sized; None leaves the choice to the planner)."""
+    l = left.alias("l")
+    r = (left if right is None else right).alias("r")
+    la, ra = F.col(f"l.{left.columns[0]}"), F.col(f"r.{r.columns[0]}")
+    if right is None:
+        cond, ids = la < ra, (la, ra)
+    elif directed:
+        cond, ids = la != ra, (la, ra)
+    else:
+        cond, ids = la != ra, (F.least(la, ra), F.greatest(la, ra))
+    for k in keys:
+        cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
+    candidates = (
+        l.join(r, cond)
+        .select(ids[0].alias("id_a"), ids[1].alias("id_b"))
+        .distinct()
+    )
+    sides = []
+    payload_b = payload if payload_b is None else payload_b
+    for tag, side in (("a", payload), ("b", payload_b)):
+        pid, val = side.columns
+        side = side.select(
+            F.col(pid).alias(f"id_{tag}"), F.col(val).alias(f"{val}_{tag}")
+        )
+        sides.append(side.hint(hint) if hint else side)
+    return (
+        candidates.join(sides[0], "id_a")
+        .join(sides[1], "id_b")
+        .select("id_a", "id_b", score)
+    )
+
+
+def _jaccard_pairs(
+    left: DataFrame,
+    right: DataFrame | None,
+    docs: DataFrame,
+    threshold: float,
+    hint: str | None,
+) -> DataFrame:
+    """MinHash band join verified with exact Jaccard over the (doc_id, sh)
+    shingle sets ``docs`` — the verify of every MinHash pair operator."""
+    return _band_join(
+        left,
+        right,
+        ["band"],
+        docs.select("doc_id", "sh"),
+        F.round(jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
+        hint,
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_auto_params(
@@ -320,7 +368,6 @@ def minhash_lsh_pairs(
     if target_recall is not None:
         rows_per_band, bands = minhash_auto_params(threshold, target_recall)
         num_hashes = rows_per_band * bands
-    rows_per_band = num_hashes // bands
     docs = _shingled_docs(df, id_col, text_col, shingle_n)
 
     # persisted: the self-join below evaluates both sides and Spark does not
@@ -332,33 +379,11 @@ def minhash_lsh_pairs(
         StorageLevel.MEMORY_AND_DISK,
     )
 
-    left = banded.alias("l")
-    right = banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = docs.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     # the shingle-set frames are CORPUS-sized: pin sort-merge so a size
     # misestimate can never promote them to a driver-built broadcast
     # (observed at 5x bench scale via tools_scale_slope.py — the broadcast
     # build OOMs the driver long before 100 TB)
-    verified = (
-        candidates.join(a.hint("merge"), "id_a")
-        .join(b.hint("merge"), "id_b")
-        .select("id_a", "id_b", F.round(jaccard("sh_a", "sh_b"), 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified
+    return _jaccard_pairs(banded, None, docs, threshold, "merge")
 
 
 def ngram_jaccard_pairs(
@@ -623,19 +648,26 @@ def simhash_packed(df: DataFrame, hash_col: str, bits: int = 28) -> DataFrame:
     28 separate interpreted ``aggregate`` folds over the base-hash array
     (one per bit, 28 passes per document). Here the per-bit set-counts are
     packed 4-per-long into 16-bit fields, so SEVEN folds carry all 28
-    counters (each fold step is four codegen'd shift/mask/adds — no carry
-    interference below 65535 hashes per doc, far above any document's
-    distinct-shingle count since count <= text length), and the majority
-    votes (2*count > n  <=>  count*1 + (n-count)*(-1) > 0, the r13 rule
-    verbatim) assemble into one packed signature long in a SECOND
-    projection, so each fold is evaluated once. Measured on sf0.1
+    counters (each fold step is four codegen'd shift/mask/adds), and the
+    majority votes (2*count > n  <=>  count*1 + (n-count)*(-1) > 0, the
+    r13 rule verbatim) assemble into one packed signature long in a
+    SECOND projection, so each fold is evaluated once. Measured on sf0.1
     dedup_simhash: 3.47s -> 1.26s with byte-identical output (exceptAll
     both ways = 0). The base hash is 31 bits wide, so bits <= 31; 16-bit
     fields cap bits at 4 fields/long * 7 longs = 28 exactly.
+
+    A 16-bit field is exact only while every count stays below 32768:
+    the top field sits at bit 48, so a count of 32768 reaches the sign
+    bit (ARITHMETIC_OVERFLOW under ANSI) and 65536 carries into the next
+    field. Rows with more hashes than that are routed by ``size`` to one
+    unpacked fold over an array of ``bits`` counters (slow, but exact at
+    any length). It is a single expression, so it adds little generated
+    code to the packed path, and a CASE branch runs only for its rows.
     """
-    n_longs = (bits + 3) // 4
-    cols = [F.size(hash_col).alias("__sh_n")]
-    for longno in range(n_longs):
+    n = F.size(hash_col)
+    packed = n < 32768
+    cols = [n.alias("__sh_n")]
+    for longno in range((bits + 3) // 4):
         terms = []
         for field in range(min(4, bits - longno * 4)):
             j = longno * 4 + field
@@ -643,12 +675,17 @@ def simhash_packed(df: DataFrame, hash_col: str, bits: int = 28) -> DataFrame:
             if field:
                 t = f"shiftleft({t}, {16 * field})"
             terms.append(t)
-        cols.append(
-            F.expr(
-                f"aggregate({hash_col}, 0L, (acc, h) -> "
-                f"acc + {' + '.join(terms)})"
-            ).alias(f"__sh_acc{longno}")
+        fold = F.expr(
+            f"aggregate({hash_col}, 0L, (acc, h) -> acc + {' + '.join(terms)})"
         )
+        cols.append(F.when(packed, fold).alias(f"__sh_acc{longno}"))
+    unpacked = F.expr(
+        f"aggregate(transform(aggregate({hash_col}, array_repeat(0L, {bits}), "
+        "(acc, h) -> transform(acc, (c, j) -> c + (shiftright(h, j) & 1))), "
+        f"(c, j) -> shiftleft(if(2 * c > size({hash_col}), 1L, 0L), j)), "
+        "0L, (s, v) -> s + v)"
+    )
+    cols.append(F.when(~packed, unpacked).alias("__sh_wide"))
     voted = df.select("doc_id", *cols)
     bit_terms = []
     for j in range(bits):
@@ -658,7 +695,12 @@ def simhash_packed(df: DataFrame, hash_col: str, bits: int = 28) -> DataFrame:
             f"shiftleft(case when 2 * {count} > __sh_n "
             f"then 1L else 0L end, {j})"
         )
-    return voted.select("doc_id", F.expr(" + ".join(bit_terms)).alias("sigp"))
+    return voted.select(
+        "doc_id",
+        F.when(F.col("__sh_n") < 32768, F.expr(" + ".join(bit_terms)))
+        .otherwise(F.col("__sh_wide"))
+        .alias("sigp"),
+    )
 
 
 def simhash_pairs(
@@ -881,7 +923,6 @@ def minhash_lsh_pairs_incremental(
     only on candidates with a delta member. Pairs fully inside the
     delta batch are included (both docs are new).
     """
-    rows_per_band = num_hashes // bands
     docs = _shingled_docs(df, id_col, text_col, shingle_n)
     banded = pin(
         minhash_banded(docs, num_hashes, bands, hash_impl),
@@ -893,39 +934,13 @@ def minhash_lsh_pairs_incremental(
     delta_banded = banded.join(
         is_delta.filter("__is_delta").select("doc_id"), "doc_id"
     )
-    l = delta_banded.alias("l")
-    r = banded.alias("r")
     # no forced broadcast of the delta side: a "small" batch is a deploy
     # assumption, not a construction bound (20% of a 100 TB corpus is not
     # driver-buildable). The band equi-join lets the size-based planner
     # broadcast a genuinely small banded delta and demote a large one to
-    # a spillable sort-merge shuffle on the band key.
-    candidates = (
-        l
-        .join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("id_a"),
-            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = docs.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # corpus-sized shingle frames: pin sort-merge (see minhash verify)
-    return (
-        candidates.join(a.hint("merge"), "id_a")
-        .join(b.hint("merge"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    # a spillable sort-merge shuffle on the band key. The shingle frames
+    # are corpus-sized: pin sort-merge (see minhash_lsh_pairs).
+    return _jaccard_pairs(delta_banded, banded, docs, threshold, "merge")
 
 
 # --- at-rest MinHash band layout ---------------------------------------------
@@ -943,9 +958,11 @@ def minhash_lsh_pairs_incremental(
 #
 # Layout on disk (all plain parquet, any Hadoop filesystem):
 #   {path}/bands/     (doc_id, band) partitioned by band_idx — the LSH
-#                     index itself; narrow rows (~id + short string), so a
-#                     full scan costs band-table bytes, never corpus bytes.
-#                     Holds the layout's sidecar.
+#                     index itself; narrow rows (two int64s: the id and
+#                     the band key of :func:`minhash_banded`), so a full
+#                     scan costs band-table bytes, never corpus bytes.
+#                     Holds the layout's sidecar (format_version 2; the
+#                     string band keys of version 1 are refused).
 #   {path}/shingles/  (doc_id, sh array) — the verification side, read
 #                     only for candidate doc_ids
 #
@@ -954,29 +971,6 @@ def minhash_lsh_pairs_incremental(
 # stored side streams map-only — no shuffle of the index), then exact
 # Jaccard on candidates only. Cost tracks |delta| x bucket-mates, not
 # |corpus| (measured: tools_dedup_slope.py).
-
-
-def _dedup_layout_banded(
-    docs: DataFrame,
-    num_hashes: int,
-    bands: int,
-    rows_per_band: int,
-    hash_impl: str,
-) -> DataFrame:
-    """(doc_id, band, band_idx) rows of a shingled frame — the shared
-    signing pass for write/append/probe (band_idx is the band's ordinal,
-    the layout's partition key)."""
-    return (
-        docs.withColumn("bh", base_hashes("sh", hash_impl))
-        .select("doc_id", minhash_signature("bh", num_hashes).alias("sig"))
-        .select(
-            "doc_id",
-            F.explode(band_keys("sig", bands, rows_per_band)).alias("band"),
-        )
-        .withColumn(
-            "band_idx", F.split(F.col("band"), ",").getItem(0).cast("int")
-        )
-    )
 
 
 def write_minhash_bands(
@@ -1029,10 +1023,9 @@ def _minhash_layout_rows(
     """The layout's two tables for a batch: (doc_id, band, band_idx) band
     rows and (doc_id, sh) shingle sets."""
     docs = _shingled_docs(df, id_col, text_col, shingle_n)
-    banded = _dedup_layout_banded(
-        docs, num_hashes, bands, num_hashes // bands, hash_impl
+    return minhash_banded(docs, num_hashes, bands, hash_impl), docs.select(
+        "doc_id", "sh"
     )
-    return banded, docs.select("doc_id", "sh")
 
 
 def append_minhash_bands(df: DataFrame, path: str) -> None:
@@ -1083,52 +1076,27 @@ def dedup_incremental_at_rest(
     recompute-the-corpus-per-batch gap its on-the-fly twin documents."""
     spark = delta.sparkSession
     meta = L.open(spark, L.MINHASH_BANDS, path, "dedup_incremental_at_rest")
-    rows_per_band = meta["num_hashes"] // meta["bands"]
     docs_delta = _shingled_docs(
         delta, meta["id_col"], meta["text_col"], meta["shingle_n"]
     )
     banded_delta = pin(
-        _dedup_layout_banded(
-            docs_delta, meta["num_hashes"], meta["bands"], rows_per_band,
-            meta["hash_impl"],
+        minhash_banded(
+            docs_delta, meta["num_hashes"], meta["bands"], meta["hash_impl"]
         ).select("doc_id", "band"),
         StorageLevel.MEMORY_AND_DISK,
     )
     stored = spark.read.parquet(f"{path}/bands").select("doc_id", "band")
-    l = banded_delta.alias("l")
-    r = stored.unionByName(banded_delta).alias("r")
-    candidates = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("id_a"),
-            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("id_b"),
-        )
-        .distinct()
-    )
     sh_all = (
         spark.read.parquet(f"{path}/shingles")
         .select("doc_id", "sh")
         .unionByName(docs_delta.select("doc_id", "sh"))
     )
-    a = sh_all.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh_all.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     # no merge hint here (unlike the full-corpus dedup verify): the
     # candidate frame is delta-bounded, so the size-based planner may
     # legitimately broadcast it and STREAM the corpus-sized shingle table
     # instead of shuffling it
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _jaccard_pairs(
+        banded_delta, stored.unionByName(banded_delta), sh_all, threshold, None
     )
 
 

@@ -33,6 +33,7 @@ from etl_data_spark.io.layout import compact as compact_layout  # noqa: F401
 from etl_data_spark.io.layout import skew_report as layout_skew_report  # noqa: F401
 from etl_data_spark.io.layout import stats as layout_stats  # noqa: F401
 from etl_data_spark.operators import _sqlexpr as _sx
+from etl_data_spark.operators.dedup import _band_join
 
 
 def _guard_max_pairs(
@@ -231,10 +232,11 @@ def knn_join_lsh_banded(
     independent plane-sets buckets BOTH sides (auto-sized codes keep
     expected occupancy ~``target_bucket_rows`` at any corpus size, so
     per-band candidates stay LINEAR in rows — a fixed code length is the
-    quadratic trap SCALE.md §29 measured), candidates are the per-band
-    bucket equi-joins carrying only (query_id, neighbor_id), the
-    cross-band ``dropDuplicates`` merges them, and the wide vectors join
-    back ONCE for the exact-cosine scoring. The per-query ``row_number``
+    quadratic trap SCALE.md §29 measured), candidates come from ONE
+    equi-join on (band, bucket) carrying only (query_id, neighbor_id)
+    (``dedup._band_join``, directed pairs), the cross-band distinct
+    merges them, and the wide vectors join back ONCE for the
+    exact-cosine scoring. The per-query ``row_number``
     window then ranks ~bands * target_bucket_rows candidates — a
     BOUNDED frame by construction of the sizing law, independent of
     corpus size, so the window never sees a data-scaled partition.
@@ -248,16 +250,14 @@ def knn_join_lsh_banded(
     fewer than k rows rather than arbitrary fill. ``n_rows``: see
     ``near_dup_pairs_lsh_banded``.
 
-    Input re-evaluation: each band re-derives buckets from BOTH sides
-    (``2 * bands`` ``lsh_bucket_assign`` scans) and the scoring joins
-    back to each side once more — ~``bands + 1`` evaluations per input
-    plan (~10 total at the default ``bands=4``). For plain parquet
+    Input re-evaluation: every band's code comes from ONE narrow
+    projection per side (``_banded_exploded``, narrowed to the id before
+    the explode) and the scoring joins back to each side once more — two
+    evaluations per input plan whatever ``bands`` is. For plain parquet
     scans that is the cheap, cache-free design; for an EXPENSIVE
     uncached upstream plan, ``.cache()``/checkpoint the inputs first or
-    read the right side from its at-rest layout (``write_ann_bucketed``
-    already persists the per-band bucket of ONE plane-set; a banded
-    layout is ``bands`` such writes), matching the guidance on
-    ``near_dup_pairs_lsh_banded``.
+    serve the right side from its at-rest layout
+    (``write_ann_banded`` + ``knn_join_lsh_banded_at_rest``).
     """
     from pyspark.sql import Window
 
@@ -266,34 +266,25 @@ def knn_join_lsh_banded(
             n_rows if n_rows is not None else _bounded_count(right),
             target_bucket_rows,
         )
-    cand = None
-    for band in range(bands):
-        band_seed = seed + 7919 * band
-        lb = lsh_bucket_assign(
-            left, dim, planes_per_band, band_seed, vec_col
-        ).select(F.col(left_id).alias("query_id"), "bucket")
-        rb = lsh_bucket_assign(
-            right, dim, planes_per_band, band_seed, vec_col
-        ).select(F.col(right_id).alias("neighbor_id"), "bucket")
-        pairs = (
-            lb.join(rb, "bucket")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
+
+    def coded(df: DataFrame, id_col: str) -> DataFrame:
+        return _banded_exploded(
+            df, dim, bands, planes_per_band, seed, vec_col,
+            [F.col(id_col).alias("id")],
         )
-        cand = pairs if cand is None else cand.unionByName(pairs)
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    qv = left.select(F.col(left_id).alias("query_id"), F.col(vec_col).alias("qv"))
-    nv = right.select(
-        F.col(right_id).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    )
-    scored = (
-        cand.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cosine_sim"),
-        )
+
+    scored = _band_join(
+        coded(left, left_id),
+        coded(right, right_id),
+        ["band", "bucket"],
+        left.select(left_id, F.col(vec_col).alias("v")),
+        F.round(cosine("v_a", "v_b"), 6).alias("cosine_sim"),
+        directed=True,
+        payload_b=right.select(right_id, F.col(vec_col).alias("v")),
+    ).select(
+        F.col("id_a").alias("query_id"),
+        F.col("id_b").alias("neighbor_id"),
+        "cosine_sim",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
@@ -358,7 +349,9 @@ def near_dup_pairs_lsh(
 ) -> DataFrame:
     """Single-plane-set LSH near-dup pairs: candidates share ONE
     random-hyperplane bucket (equi-join on the bucket id), then exact
-    cosine verification on the candidate set only.
+    cosine verification on the candidate set only — the ``bands=1`` call
+    of ``near_dup_pairs_lsh_banded`` (band 0's plane-set is seeded
+    ``seed``, so the buckets are the single-plane-set ones).
 
     **The scale path is ``near_dup_pairs_lsh_banded``.** A FIXED plane
     count is secretly quadratic: expected candidates are ~n²/2^(p+1), so
@@ -376,30 +369,17 @@ def near_dup_pairs_lsh(
     ``n_rows``: caller-supplied corpus size for the auto-sizer (skips the
     bounded counting probe — pass it when the input plan is expensive).
     """
-    if num_planes is None:
-        num_planes = _auto_planes(
-            n_rows if n_rows is not None else _bounded_count(df),
-            target_bucket_rows,
-        )
-    bucketed = lsh_bucket_assign(df, dim, num_planes, seed, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "bucket"
-    )
-    a = bucketed.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), "bucket"
-    )
-    b = bucketed.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), "bucket"
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .distinct()
+    return near_dup_pairs_lsh_banded(
+        df,
+        dim,
+        threshold,
+        bands=1,
+        planes_per_band=num_planes,
+        target_bucket_rows=target_bucket_rows,
+        seed=seed,
+        id_col=id_col,
+        vec_col=vec_col,
+        n_rows=n_rows,
     )
 
 
@@ -514,14 +494,15 @@ def near_dup_pairs_lsh_banded(
     candidates stay ~n·target/2 — linear. The recall a longer code costs
     is recovered by the OR over bands (a pair with per-plane agreement q
     survives with 1-(1-q^r)^b) — the same band/row trade
-    ``minhash_lsh_pairs`` uses for text (dedup.py:194).
+    ``minhash_lsh_pairs`` uses for text, through the same band join
+    (``dedup._band_join``).
 
-    Stage shape (Spark-first): only (id_a, id_b) travel through the b
-    band-joins and the cross-band ``dropDuplicates``; the wide embedding
-    arrays are joined back ONCE for the exact-cosine verify, so vector
-    payloads never ride the candidate shuffles. Every stage is a keyed
-    equi-join — no all-pairs anywhere, and the verify keeps precision
-    exact (the bands only decide WHICH pairs get scored).
+    Stage shape (Spark-first): only (id_a, id_b) travel through the
+    (band, bucket) equi-join and the cross-band distinct; the wide
+    embedding arrays are joined back ONCE for the exact-cosine verify,
+    so vector payloads never ride the candidate shuffle. Every stage is
+    a keyed equi-join — no all-pairs anywhere, and the verify keeps
+    precision exact (the bands only decide WHICH pairs get scored).
 
     ``n_rows``: caller-supplied corpus size for the auto-sizer. When
     absent, the size comes from a bounded doubling probe
@@ -540,13 +521,13 @@ def near_dup_pairs_lsh_banded(
     n*target/2-candidate equi-join), so at 100 TB set the floor you can
     afford rather than inheriting the default.
 
-    Input re-evaluation: each band re-derives buckets from ``df`` (one
-    ``lsh_bucket_assign`` scan per band) and the verify joins back to
-    ``df`` twice more — ``bands + 2`` evaluations of the input plan. For
-    a plain parquet scan that is the cheap, cache-free design; for an
-    EXPENSIVE upstream plan (joins/aggregations), ``.cache()`` or
-    checkpoint the input first, or run against the at-rest layout
-    (``write_ann_bucketed``), or the multiplier bites.
+    Input re-evaluation: every band's code comes from ONE narrow
+    projection of ``df`` (``_banded_exploded``, narrowed to the id
+    before the explode) feeding both sides of the self-join, and the
+    verify joins back to ``df`` twice — a fixed number of evaluations of
+    the input plan whatever ``bands`` is. For a plain parquet scan that
+    is the cheap, cache-free design; for an EXPENSIVE upstream plan
+    (joins/aggregations), ``.cache()`` or checkpoint the input first.
     """
     if planes_per_band is None or target_recall is not None:
         n = n_rows if n_rows is not None else _bounded_count(df)
@@ -560,32 +541,16 @@ def near_dup_pairs_lsh_banded(
             target_bucket_rows,
             planes_per_band=planes_per_band,
         )
-    ids = None
-    for band in range(bands):
-        bucketed = lsh_bucket_assign(
-            df, dim, planes_per_band, seed + 7919 * band, vec_col
-        ).select(F.col(id_col).alias("id"), "bucket")
-        a = bucketed.select(F.col("id").alias("id_a"), "bucket")
-        b = bucketed.select(F.col("id").alias("id_b"), "bucket")
-        pairs = (
-            a.join(b, "bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        ids = pairs if ids is None else ids.unionByName(pairs)
-    cand = ids.dropDuplicates(["id_a", "id_b"])
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
+    banded = _banded_exploded(
+        df, dim, bands, planes_per_band, seed, vec_col, [F.col(id_col).alias("id")]
     )
+    return _band_join(
+        banded,
+        None,
+        ["band", "bucket"],
+        df.select(id_col, F.col(vec_col).alias("v")),
+        F.round(cosine("v_a", "v_b"), 6).alias("cosine_sim"),
+    ).filter(F.col("cosine_sim") >= threshold)
 
 
 def _plane(seed: int, plane: int, dim: int) -> list[float]:
@@ -616,12 +581,18 @@ def lsh_bucket_assign(
     by it, and a query probes only matching buckets (plus Hamming-adjacent
     ones for higher recall).
     """
+    return df.withColumn(out_col, _bucket_code(vec_col, dim, num_planes, seed))
+
+
+def _bucket_code(vec_col: str, dim: int, num_planes: int, seed: int) -> F.Column:
+    """The sign bits of ``vec_col`` against ``num_planes`` seeded planes,
+    read as one integer bucket code."""
     bucket = F.lit(0)
     for p in range(num_planes):
         plane = F.expr(_sx.dbl_array(_plane(seed, p, dim)))
         bit = F.when(dot(F.col(vec_col), plane) >= 0, 1).otherwise(0)
         bucket = bucket * 2 + bit
-    return df.withColumn(out_col, bucket)
+    return bucket
 
 
 def ivf_assign(
@@ -1177,13 +1148,13 @@ def write_ann_banded(
 ) -> None:
     """Materialize the BANDED LSH layout: the corpus parquet-partitioned
     by (band, bucket), one replica per band — the at-rest form of the
-    index `knn_join_lsh_banded` / `near_dup_pairs_lsh_banded` rebuild
-    on every call (each band re-derives its buckets from the input;
-    SCALE.md §30). Storage costs ``bands``× the corpus (the classic
-    LSH-index replica trade: recall 1-(1-q^r)^b is bought with b
-    replicas), written in ONE scan: all band codes are computed as
-    narrow map columns and ``posexplode``d, so the input plan is
-    evaluated once, not per band.
+    index `knn_join_lsh_banded` / `near_dup_pairs_lsh_banded` compute
+    from the input on every call (SCALE.md §30), built by the same
+    one-pass band coding (`_banded_exploded`). Storage costs ``bands``×
+    the corpus (the classic LSH-index replica trade: recall 1-(1-q^r)^b
+    is bought with b replicas), written in ONE scan: all band codes are
+    computed as narrow map columns and ``posexplode``d, so the input plan
+    is evaluated once, not per band.
 
     ``planes_per_band=None`` auto-sizes the code (`_auto_planes`) so
     expected per-(band,bucket) rows stay ~``target_bucket_rows`` at any
@@ -1223,6 +1194,19 @@ def write_ann_banded(
     )
 
 
+def _band_codes(
+    vec_col: str, dim: int, bands: int, planes_per_band: int, seed: int
+) -> F.Column:
+    """Array of every band's bucket code; band ``b`` uses the plane-set
+    seeded ``seed + 7919 * b``, so band 0 is the single-plane-set code."""
+    return F.array(
+        *[
+            _bucket_code(vec_col, dim, planes_per_band, seed + 7919 * band)
+            for band in range(bands)
+        ]
+    )
+
+
 def _banded_exploded(
     df: DataFrame,
     dim: int,
@@ -1230,23 +1214,18 @@ def _banded_exploded(
     planes_per_band: int,
     seed: int,
     vec_col: str,
+    keep: list | None = None,
 ) -> DataFrame:
-    """One narrow pass computing every band's bucket code, posexploded to
-    (band, bucket) rows — the single-scan replica construction shared by
-    write_ann_banded and append_ann_banded."""
-    coded = df
-    code_cols = []
-    for band in range(bands):
-        col = f"_band_code_{band}"
-        coded = lsh_bucket_assign(
-            coded, dim, planes_per_band, seed + 7919 * band, vec_col, col
-        )
-        code_cols.append(col)
-    return coded.select(
-        *[c for c in df.columns],
-        F.posexplode(F.array(*[F.col(c) for c in code_cols])).alias(
-            "band", "bucket"
-        ),
+    """``keep`` (default: every column of ``df``) + (band, bucket) rows:
+    one narrow pass computes every band's code and posexplodes them, so
+    the input plan is evaluated once whatever the band count. Shared by
+    the banded layout's write/append and the on-the-fly banded joins,
+    which keep only the id."""
+    return df.select(
+        *(df.columns if keep is None else keep),
+        F.posexplode(
+            _band_codes(vec_col, dim, bands, planes_per_band, seed)
+        ).alias("band", "bucket"),
     )
 
 
@@ -1336,16 +1315,10 @@ def knn_join_lsh_banded_at_rest(
         StructType,
     )
 
-    coded = left
-    for band in range(bands):
-        coded = lsh_bucket_assign(
-            coded, dim, planes, seed + 7919 * band, vec_col,
-            f"_band_code_{band}",
-        )
-    qrows = coded.select(
+    qrows = left.select(
         F.col(left_id).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        *[f"_band_code_{b}" for b in range(bands)],
+        _band_codes(vec_col, dim, bands, planes, seed).alias("codes"),
     ).collect()
     id_type = left.schema[left_id].dataType
     result_schema = StructType(
@@ -1362,9 +1335,9 @@ def knn_join_lsh_banded_at_rest(
         # the on-the-fly twin yields no rows for no queries; mirror it
         return spark.createDataFrame([], result_schema)
     probe_rows = [
-        (r["query_id"], b, r[f"_band_code_{b}"])
+        (r["query_id"], b, code)
         for r in qrows
-        for b in range(bands)
+        for b, code in enumerate(r["codes"])
     ]
     lb = spark.createDataFrame(
         probe_rows,

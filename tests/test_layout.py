@@ -169,31 +169,40 @@ def test_format_version_mismatch_is_refused(spark, emb, docs, tmp_path, kind):
     """Bump a layout's sidecar format_version: every reader, appender and
     compact_layout refuses it with the uniform error naming the kind and
     both versions. Deleting the key (a sidecar as written before the key
-    existed) reads as version 1 and probes exactly as before."""
+    existed) reads as version 1: a kind still at version 1 probes exactly
+    as before, a kind past it (minhash_bands, whose version-1 band keys
+    were strings) is refused the same way."""
     write, probe, calls = KINDS[kind]
+    version = L.SPECS[kind].format_version
     path = str(tmp_path / kind)
     write(spark, emb, docs, path)
     meta_dir = f"{path}/{L.SPECS[kind].meta_sub}".rstrip("/")
     meta = L.read_meta(spark, meta_dir)
-    assert meta["kind"] == kind and meta["format_version"] == 1
+    assert meta["kind"] == kind and meta["format_version"] == version
     want = _rows(probe(spark, emb, docs, path))
 
-    L.write_meta(spark, meta_dir, {**meta, "format_version": 2})
-    uniform = (
-        rf"is kind='{kind}' \(format_version 2\), not '{kind}' "
-        r"\(format_version 1\)"
-    )
-    for name, call in calls + [
-        ("compact_layout", lambda s, e, d, p: S.compact_layout(s, p)),
-        ("layout_stats", lambda s, e, d, p: S.layout_stats(s, p)),
-    ]:
-        with pytest.raises(ValueError, match=uniform) as err:
-            call(spark, emb, docs, path)
-        assert str(err.value).startswith(name), (name, str(err.value))
+    def refused(found):
+        uniform = (
+            rf"is kind='{kind}' \(format_version {found}\), not '{kind}' "
+            rf"\(format_version {version}\)"
+        )
+        for name, call in calls + [
+            ("compact_layout", lambda s, e, d, p: S.compact_layout(s, p)),
+            ("layout_stats", lambda s, e, d, p: S.layout_stats(s, p)),
+        ]:
+            with pytest.raises(ValueError, match=uniform) as err:
+                call(spark, emb, docs, path)
+            assert str(err.value).startswith(name), (name, str(err.value))
+
+    L.write_meta(spark, meta_dir, {**meta, "format_version": version + 1})
+    refused(version + 1)
 
     del meta["format_version"]
     L.write_meta(spark, meta_dir, meta)
-    assert _rows(probe(spark, emb, docs, path)) == want
+    if version == 1:
+        assert _rows(probe(spark, emb, docs, path)) == want
+    else:
+        refused(1)
 
 
 @pytest.mark.parametrize("kind", ["sq8", "gram_index"])

@@ -65,6 +65,34 @@ def test_simhash_near_dups(spark, docs):
     assert (1, 4) not in out
 
 
+@pytest.mark.parametrize("n_hashes", [70_000, 140_000])
+def test_simhash_packed_votes_past_16_bit_fields(spark, n_hashes):
+    """The packed vote counters hold 16-bit fields; a document with more
+    than 32767 base hashes must still get the per-bit majority signature
+    (it overflowed under ANSI, or carried into the next field without
+    it). A small row rides along so both field widths run in one frame."""
+    import numpy as np
+
+    rng = np.random.default_rng(n_hashes)
+    big = rng.integers(0, 2**31 - 1, n_hashes)
+    small = rng.integers(0, 2**31 - 1, 1000)
+    df = spark.createDataFrame(
+        [(0, small.tolist()), (1, big.tolist())], "doc_id long, bh array<bigint>"
+    )
+
+    def majority(h):
+        counts = ((h[:, None] >> np.arange(28)) & 1).sum(axis=0)
+        return int(((2 * counts > len(h)) << np.arange(28)).sum())
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = {r["doc_id"]: r["sigp"] for r in D.simhash_packed(df, "bh").collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {0: majority(small), 1: majority(big)}
+
+
 def test_text_ops(spark):
     df = spark.createDataFrame(
         [(1, "The cat and the dog!"), (2, ""), (3, "der und die nicht der")],

@@ -475,3 +475,43 @@ def test_dedup_at_rest_probe_signs_only_the_delta(spark, tmp_path):
     assert any(
         "[band#" in ln or "band_idx#" in ln for ln in bhj_lines
     ), f"no BroadcastHashJoin keyed on the band column: {bhj_lines}"
+
+
+def test_banded_lsh_signs_and_codes_in_one_pass(spark, tmp_path):
+    """One signing path, one coding pass. MinHash: the band rows
+    write_minhash_bands persists and the dedup_incremental_at_rest probe
+    both sign through the vectorized Arrow pass (a MapInArrow node), with
+    no interpreted ``concat_ws`` string band key. Hyperplane bands: every
+    band's code comes from one projection, so the executed
+    near_dup_pairs_lsh_banded plan scans the embeddings the same number
+    of times at any band count."""
+    from etl_data_spark.operators import dedup as D
+    from etl_data_spark.operators import similarity as S
+    from etl_data_spark.queries import load_table
+
+    d = load_table(spark, SF_DIR, "documents")
+    path = str(tmp_path / "bands_one_pass")
+    D.write_minhash_bands(d.filter(F.col("doc_id") < 400), path)
+    written, _ = D._minhash_layout_rows(
+        d.filter(F.col("doc_id") < 400), "doc_id", "text", 3, 64, 16, "md5"
+    )
+    probe = D.dedup_incremental_at_rest(d.filter(F.col("doc_id") >= 400), path)
+    for frame in (written, probe):
+        p = plan(frame)
+        # the string band key was concat_ws(",", ...); the shingling's
+        # concat_ws(" ", ...) is expected
+        assert "MapInArrow" in p and "concat_ws(," not in p, p[:2000]
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    dim = len(e.first()["embedding"])
+
+    def emb_scans(bands):
+        p = plan(S.near_dup_pairs_lsh_banded(
+            e, dim=dim, bands=bands, planes_per_band=3
+        ))
+        return sum(
+            "FileScan parquet" in ln and "embeddings" in ln
+            for ln in p.splitlines()
+        )
+
+    assert emb_scans(2) == emb_scans(6) > 0
