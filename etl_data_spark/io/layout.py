@@ -35,9 +35,11 @@ from pyspark.sql import functions as F
 
 from etl_data_spark.io.writers import (
     _count_parquet_files,
-    _delete,
     _fs,
-    _rename,
+    _heal_rewrite,
+    read_text,
+    rewrite,
+    write_text,
 )
 
 META_FILE = "_ann_meta.json"
@@ -118,27 +120,13 @@ def _join(path: str, sub: str) -> str:
 
 def write_meta(spark, path: str, meta: dict) -> None:
     """Write ``meta`` as the sidecar of the directory ``path``."""
-    fs, p = _fs(spark, _join(path, META_FILE))
-    out = fs.create(p, True)
-    try:
-        out.write(json.dumps(meta, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
+    write_text(spark, _join(path, META_FILE), json.dumps(meta, sort_keys=True))
 
 
 def read_meta(spark, path: str) -> dict | None:
     """The sidecar of the directory ``path``; None when there is none."""
-    fs, p = _fs(spark, _join(path, META_FILE))
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
+    text = read_text(spark, _join(path, META_FILE))
+    return None if text is None else json.loads(text)
 
 
 def _check(spec: LayoutSpec, meta: dict | None, path: str, op: str) -> None:
@@ -331,35 +319,6 @@ def skew_report(spark, path: str) -> dict:
     }
 
 
-def _heal(spark, path: str, tag: str) -> None:
-    """Crash healing for :func:`rewrite`: a crash BETWEEN its two renames
-    leaves the directory only at its trash sibling — restore it. A trash
-    whose live twin exists is a post-swap leftover, cleared by the next
-    rewrite."""
-    fs, p = _fs(spark, path)
-    trash = f"{path.rstrip('/')}__pre_{tag}"
-    if not fs.exists(p) and fs.exists(_fs(spark, trash)[1]):
-        _rename(fs, spark, trash, path)
-
-
-def rewrite(spark, path: str, tag: str, build):
-    """Crash-safe rewrite of one directory: ``build(tmp)`` writes the new
-    contents into a sibling tmp dir, then two Hadoop FS renames swap it in
-    (same contract as ``io.writers.compact_small_files``). Returns what
-    ``build`` returns."""
-    fs, _ = _fs(spark, path)
-    base = path.rstrip("/")
-    tmp, trash = f"{base}__tmp_{tag}", f"{base}__pre_{tag}"
-    _heal(spark, path, tag)
-    _delete(fs, spark, tmp)
-    out = build(tmp)
-    _delete(fs, spark, trash)
-    _rename(fs, spark, path, trash)
-    _rename(fs, spark, tmp, path)
-    _delete(fs, spark, trash)
-    return out
-
-
 def compact(spark, path: str, target_files_per_partition: int = 1) -> int:
     """Rewrite every table of a layout (or the one table directory given)
     into ``target_files_per_partition`` files per partition directory.
@@ -369,7 +328,7 @@ def compact(spark, path: str, target_files_per_partition: int = 1) -> int:
     they are, so pruning and probe results are unchanged: compaction moves
     bytes, never assignments (a SKEWED layout needs a retrain or a fresh
     write instead). Returns the number of data files after."""
-    _heal(spark, path, "compact")
+    _heal_rewrite(spark, path, "compact")
     _, tables = _locate(spark, path, "compact_layout")
     fs, _ = _fs(spark, path)
     n = 0

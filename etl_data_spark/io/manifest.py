@@ -37,13 +37,15 @@ same next version collide on the manifest create and the loser raises
 instead of overwriting the winner's "immutable" manifest and dropping
 its months at the pointer flip.
 
-Pointer honesty: on local FS / HDFS, ``fs.create(overwrite=True)`` of
+Pointer honesty: on local FS / HDFS, an overwriting create of
 ``_current`` is not atomic (a reader could glimpse a truncated file).
-Manifests are immutable and never overwritten, so :func:`_resolve`
-treats an unreadable/missing pointer as "fall back to the
-highest-numbered manifest" — old-or-new still holds; the truly-atomic
-flip is exactly what S3 PUT provides, which is the deployment this
-module targets (HDFS/local deployments can keep the rename path).
+Versions are immutable once complete, so :func:`_resolve_version`
+treats a missing, torn or dangling pointer as "fall back to the
+highest-numbered complete version" — old-or-new still holds; the
+truly-atomic flip is exactly what S3 PUT provides, which is the
+deployment this module targets (HDFS/local deployments can keep the
+rename path). The streaming cluster table shares this resolver, and so
+this fallback.
 
 Reference parity: implements the same delete-then-insert window
 semantics as the reference's ``fn_dm_data_stg_to_dm_load``
@@ -55,7 +57,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,11 +68,12 @@ from etl_data_spark.io.writers import (
     _NULL_PART,
     _delete,
     _fs,
-    _jpath,
     _month_of,
     cluster_by_month,
+    read_text,
     window_replace_predicate,
     with_month_key,
+    write_text,
 )
 
 _CURRENT = "_current"
@@ -79,34 +82,67 @@ _DATA_DIR = "data"
 
 
 # --------------------------------------------------------------------------
-# Pointer + manifest plumbing (all through org.apache.hadoop.fs)
+# Versioned pointer: immutable numbered versions, ``_current`` names one
 # --------------------------------------------------------------------------
 
 
-def _write_small_file(
-    spark: SparkSession, path: str, text: str, overwrite: bool = True
-) -> None:
-    p = _jpath(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, overwrite)
-    try:
-        out.write(text.encode("utf-8"))
-    finally:
-        out.close()
-
-
-def _read_small_file(spark: SparkSession, path: str) -> str | None:
-    p = _jpath(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+def _numbered(
+    spark: SparkSession, directory: str, prefix: str, suffix: str = ""
+) -> list[int]:
+    """Sorted N of the children of ``directory`` named
+    ``{prefix}N{suffix}``; [] when the directory does not exist."""
+    fs, p = _fs(spark, directory)
     if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
+        return []
+    out = []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        num = name[len(prefix) : len(name) - len(suffix)]
+        if name.startswith(prefix) and name.endswith(suffix) and num.isdigit():
+            out.append(int(num))
+    return sorted(out)
+
+
+def _resolve_version(
+    spark: SparkSession, root: str, vdir: str, prefix: str, suffix: str, load
+):
+    """``load(path)`` of the ``vdir`` child the ``_current`` pointer under
+    ``root`` names, or — when the pointer is missing/torn/dangling (a
+    crashed pre-flip writer, a glimpsed local-FS truncation) — of the
+    highest-numbered ``{prefix}NNNNNN{suffix}`` child that loads (``load``
+    returns None or raises for an incomplete one). Complete versions are
+    immutable, so either answer is old-or-new, never partial."""
+
+    def candidates():
+        # any pointer-read failure (missing, torn mid-PUT, checksum
+        # mismatch on a checksummed FS) means "fall back", never "fail
+        # the reader"
+        try:
+            name = (read_text(spark, f"{root}/{_CURRENT}") or "").strip()
+        except Exception:
+            name = ""
+        if name:
+            yield name
+        # newest-first walk, skipping a torn top version (a writer crashed
+        # mid-write, before the flip)
+        for v in reversed(_numbered(spark, vdir, prefix, suffix)):
+            yield f"{prefix}{v:06d}{suffix}"
+
+    for name in candidates():
+        try:
+            got = load(f"{vdir}/{name}")
+        except Exception:
+            continue
+        if got is not None:
+            return got
+    return None
+
+
+def _publish_version(spark: SparkSession, root: str, name: str, write) -> None:
+    """The single-object commit: ``write()`` materializes version
+    ``name`` in full, THEN the ``_current`` pointer flips to it."""
+    write()
+    write_text(spark, f"{root}/{_CURRENT}", name)
 
 
 def _manifest_name(version: int) -> str:
@@ -114,54 +150,25 @@ def _manifest_name(version: int) -> str:
 
 
 def _list_manifest_versions(spark: SparkSession, root: str) -> list[int]:
-    fs, _ = _fs(spark, root)
-    mdir = _jpath(spark, f"{root}/{_MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return []
-    out = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.startswith("manifest-") and name.endswith(".json"):
-            out.append(int(name[len("manifest-") : -len(".json")]))
-    return sorted(out)
+    return _numbered(spark, f"{root}/{_MANIFEST_DIR}", "manifest-", ".json")
+
+
+def _load_manifest(spark: SparkSession, path: str) -> dict | None:
+    text = read_text(spark, path)
+    return json.loads(text) if text else None
 
 
 def _resolve(spark: SparkSession, root: str) -> dict | None:
-    """The live manifest: the one the ``_current`` pointer names, or —
-    when the pointer is missing/torn/stale (a crashed pre-flip writer, a
-    glimpsed local-FS truncation) — the highest-numbered manifest that
-    exists. Manifests are immutable, so either answer is a complete,
-    consistent table state (old-or-new, never partial)."""
-    # any pointer-read failure (missing, torn mid-PUT, checksum mismatch
-    # on a checksummed FS) means "fall back", never "fail the reader"
-    try:
-        name = _read_small_file(spark, f"{root}/{_CURRENT}")
-        if name:
-            text = _read_small_file(
-                spark, f"{root}/{_MANIFEST_DIR}/{name.strip()}"
-            )
-            if text:
-                return json.loads(text)
-    except Exception:
-        pass
-    # newest-first walk, skipping a torn top manifest (a writer crashed
-    # mid-manifest-write, before the flip): every complete manifest is a
-    # consistent table state
-    for v in reversed(_list_manifest_versions(spark, root)):
-        try:
-            text = _read_small_file(
-                spark, f"{root}/{_MANIFEST_DIR}/{_manifest_name(v)}"
-            )
-            if text:
-                return json.loads(text)
-        except Exception:
-            continue
-    return None
+    """The live manifest (see :func:`_resolve_version`)."""
+    return _resolve_version(
+        spark, root, f"{root}/{_MANIFEST_DIR}", "manifest-", ".json",
+        partial(_load_manifest, spark),
+    )
 
 
 def _publish(spark: SparkSession, root: str, months: dict[str, str]) -> int:
-    """Write the next immutable manifest, then flip the pointer LAST —
-    the single-object commit. Returns the new version number."""
+    """Write the next immutable manifest, then flip the pointer LAST.
+    Returns the new version number."""
     versions = _list_manifest_versions(spark, root)
     version = (versions[-1] if versions else 0) + 1
     manifest = {"version": version, "months": months}
@@ -171,13 +178,12 @@ def _publish(spark: SparkSession, root: str, months: dict[str, str]) -> int:
     # manifest must fail LOUDLY, not silently drop the first writer's
     # months at the pointer flip (r12 ADVICE). The loser retries its
     # whole reload against the winner's published state.
-    _write_small_file(
-        spark,
-        f"{root}/{_MANIFEST_DIR}/{name}",
-        json.dumps(manifest, sort_keys=True),
-        overwrite=False,
+    path = f"{root}/{_MANIFEST_DIR}/{name}"
+    text = json.dumps(manifest, sort_keys=True)
+    _publish_version(
+        spark, root, name,
+        lambda: write_text(spark, path, text, overwrite=False),
     )
-    _write_small_file(spark, f"{root}/{_CURRENT}", name)
     return version
 
 
@@ -199,20 +205,14 @@ def _write_version_dir(
     r14 (VERDICT r13 #6): month-cluster the batch like the rename-path
     writers so a version dir holds O(files_per_month) files per month,
     not tasks x months."""
-    fs, _ = _fs(spark, root)
-    ddir = _jpath(spark, f"{root}/{_DATA_DIR}")
-    existing = []
-    if fs.exists(ddir):
-        for st in fs.listStatus(ddir):
-            name = st.getPath().getName()
-            if name.startswith("v"):
-                existing.append(int(name[1:]))
-    rel = f"{_DATA_DIR}/v{(max(existing) if existing else 0) + 1:06d}"
+    existing = _numbered(spark, f"{root}/{_DATA_DIR}", "v")
+    rel = f"{_DATA_DIR}/v{(existing[-1] if existing else 0) + 1:06d}"
     cluster_by_month(keyed, date_col).write.mode("overwrite").partitionBy(
         MONTH_KEY
     ).parquet(f"{root}/{rel}")
+    fs, vpath = _fs(spark, f"{root}/{rel}")
     written = []
-    for st in fs.listStatus(_jpath(spark, f"{root}/{rel}")):
+    for st in fs.listStatus(vpath):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(f"{MONTH_KEY}="):
             written.append(name[len(MONTH_KEY) + 1 :])
@@ -373,20 +373,16 @@ def manifest_gc(spark: SparkSession, root: str, keep: int = 2) -> int:
     kept_versions = versions[-keep:]
     referenced: set[str] = set()
     for v in kept_versions:
-        text = _read_small_file(
-            spark, f"{root}/{_MANIFEST_DIR}/{_manifest_name(v)}"
-        )
+        text = read_text(spark, f"{root}/{_MANIFEST_DIR}/{_manifest_name(v)}")
         for rel in json.loads(text)["months"].values():
             referenced.add(rel.split("/")[1])  # data/<vdir>/part_month=...
     fs, _ = _fs(spark, root)
     deleted = 0
-    ddir = _jpath(spark, f"{root}/{_DATA_DIR}")
-    if fs.exists(ddir):
-        for st in fs.listStatus(ddir):
-            name = st.getPath().getName()
-            if name.startswith("v") and name not in referenced:
-                _delete(fs, spark, f"{root}/{_DATA_DIR}/{name}")
-                deleted += 1
+    for v in _numbered(spark, f"{root}/{_DATA_DIR}", "v"):
+        name = f"v{v:06d}"
+        if name not in referenced:
+            _delete(fs, spark, f"{root}/{_DATA_DIR}/{name}")
+            deleted += 1
     for v in versions[:-keep]:
         _delete(fs, spark, f"{root}/{_MANIFEST_DIR}/{_manifest_name(v)}")
     return deleted

@@ -14,9 +14,9 @@ partitioning is also the substitute for the reference's B-tree date indexes
 (01_init_all.sql:59-60) — at 100 TB, partition pruning + parquet min/max
 row-group stats serve the same access-path role.
 
-All directory manipulation goes through the Hadoop FileSystem API (same as
-the ANN layout sidecar, operators/similarity.py), so the tables may live on
-HDFS/S3/local alike — no POSIX assumption.
+All directory manipulation goes through the Hadoop FileSystem API helpers
+below (also the only FS access of io/layout.py, io/manifest.py and the
+streaming sinks), so tables may live on HDFS/S3/local alike.
 
 Atomicity contract: each month swap is two metadata renames (live -> trash,
 fresh -> live). On HDFS and local-FS a rename is atomic, so a reader sees
@@ -79,6 +79,65 @@ def _count_parquet_files(fs, spark: SparkSession, path: str) -> int:
         if it.next().getPath().getName().endswith(".parquet"):
             n += 1
     return n
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 contents of the small file ``path``; None when it does
+    not exist."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+
+
+def write_text(
+    spark: SparkSession, path: str, text: str, overwrite: bool = True
+) -> None:
+    """Create the small file ``path`` holding ``text`` (UTF-8). With
+    ``overwrite=False`` an existing file makes the create raise — the
+    loud failure a create-once (immutable) file relies on."""
+    fs, p = _fs(spark, path)
+    out = fs.create(p, overwrite)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
+
+
+def _heal_rewrite(spark: SparkSession, path: str, tag: str) -> None:
+    """Crash healing for :func:`rewrite`: a crash BETWEEN its two renames
+    leaves the directory only at its trash sibling — restore it. A trash
+    whose live twin exists is a post-swap leftover, cleared by the next
+    rewrite."""
+    fs, p = _fs(spark, path)
+    trash = f"{path.rstrip('/')}__pre_{tag}"
+    if not fs.exists(p) and fs.exists(_jpath(spark, trash)):
+        _rename(fs, spark, trash, path)
+
+
+def rewrite(spark: SparkSession, path: str, tag: str, build):
+    """Crash-safe rewrite of one whole directory: ``build(tmp)`` writes
+    the new contents into the sibling ``{path}__tmp_{tag}``, then two
+    Hadoop FS renames swap it in (live -> ``{path}__pre_{tag}`` trash,
+    fresh -> live) — atomic per rename on HDFS/local; see the module
+    docstring for S3A. Returns what ``build`` returns."""
+    fs, _ = _fs(spark, path)
+    base = path.rstrip("/")
+    tmp, trash = f"{base}__tmp_{tag}", f"{base}__pre_{tag}"
+    _heal_rewrite(spark, path, tag)
+    _delete(fs, spark, tmp)
+    out = build(tmp)
+    _delete(fs, spark, trash)
+    _rename(fs, spark, path, trash)
+    _rename(fs, spark, tmp, path)
+    _delete(fs, spark, trash)
+    return out
 
 
 def _month_dirname(month: int | None) -> str:
@@ -242,35 +301,26 @@ def compact_small_files(
     compaction. The rewrite is partition-parallel and preserves the month
     key so pruning is unaffected.
 
-    Compaction by definition rewrites every file, so this writes the whole
-    table to a sibling tmp dir and swaps it in with two Hadoop FS renames
-    (live -> trash, fresh -> live) — metadata-only on HDFS/local, where
-    each rename is atomic and the table-absent window is the instant
-    between them; on S3A rename is copy+delete and a table format is the
-    atomic answer (see module docstring). No POSIX calls touch the data.
+    Compaction by definition rewrites every file, so the whole table is
+    rewritten through the crash-safe directory swap :func:`rewrite`
+    (sibling ``__tmp_compact`` dir, ``__pre_compact`` trash).
     """
-    fs, jpath = _fs(spark, path)
-    tmp = path.rstrip("/") + "__tmp_compact"
-    trash = path.rstrip("/") + "__pre_compact"
-    # heal a crash between the two swap renames: the table then lives
-    # only at the trash name — restore it before reading
-    if not fs.exists(jpath) and fs.exists(_jpath(spark, trash)):
-        _rename(fs, spark, trash, path)
-    df = spark.read.parquet(path)
-    has_month = MONTH_KEY in df.columns
-    writer = (
-        df.repartition(target_files_per_partition, MONTH_KEY)
-        if has_month
-        else df.coalesce(target_files_per_partition)
-    )
-    w = writer.write.mode("overwrite")
-    if has_month:
-        w = w.partitionBy(MONTH_KEY)
-    w.parquet(tmp)
-    _delete(fs, spark, trash)  # leftover from a crashed prior compact
-    _rename(fs, spark, path, trash)
-    _rename(fs, spark, tmp, path)
-    _delete(fs, spark, trash)
+
+    def build(tmp: str) -> None:
+        df = spark.read.parquet(path)
+        has_month = MONTH_KEY in df.columns
+        writer = (
+            df.repartition(target_files_per_partition, MONTH_KEY)
+            if has_month
+            else df.coalesce(target_files_per_partition)
+        )
+        w = writer.write.mode("overwrite")
+        if has_month:
+            w = w.partitionBy(MONTH_KEY)
+        w.parquet(tmp)
+
+    rewrite(spark, path, "compact", build)
+    fs, _ = _fs(spark, path)
     return _count_parquet_files(fs, spark, path)
 
 

@@ -32,6 +32,7 @@ from etl_data_spark.io import layout as L
 from etl_data_spark.io.layout import compact as compact_layout  # noqa: F401
 from etl_data_spark.io.layout import skew_report as layout_skew_report  # noqa: F401
 from etl_data_spark.io.layout import stats as layout_stats  # noqa: F401
+from etl_data_spark.io.writers import rewrite
 from etl_data_spark.operators import _sqlexpr as _sx
 from etl_data_spark.operators.dedup import _band_join
 
@@ -1500,9 +1501,9 @@ def retrain_ivf_layout(
     directories, exactly as a fresh ``write_ivf_partitioned`` of the
     accumulated corpus would — deterministic seeding makes the two
     byte-equivalent in probe behavior. The rewrite lands in a sibling tmp
-    dir and swaps in via Hadoop FS renames (``layout.rewrite``, the same
-    contract as ``io.writers.compact_small_files``), so it runs on
-    HDFS/S3/local.
+    dir and swaps in via Hadoop FS renames (``io.writers.rewrite``, the
+    crash-healing directory swap ``compact_small_files`` and
+    ``compact_layout`` also use), so it runs on HDFS/S3/local.
 
     The new sidecar bumps the quantizer ``version`` (a separate field
     from the layout ``format_version``): any reader/appender still
@@ -1534,7 +1535,7 @@ def retrain_ivf_layout(
             "n_rows": n,
         }
 
-    return L.rewrite(spark, path, "retrain", build)
+    return rewrite(spark, path, "retrain", build)
 
 
 # --------------------------------------------------------------------------

@@ -26,6 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_data_spark.io.manifest import (
+    _numbered,
+    _publish_version,
+    _resolve_version,
+)
+from etl_data_spark.io.writers import _delete, _fs, with_month_key, write_text
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -179,7 +186,6 @@ def stream_to_partitioned_table(
     partition-pruned appends; exactly-once comes from the checkpointed
     batch id + append-only layout).
     """
-    from etl_data_spark.io.writers import with_month_key
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -189,7 +195,13 @@ def stream_to_partitioned_table(
             .parquet(path)
         )
 
-    writer = df.writeStream.foreachBatch(write_batch)
+    return _start_foreach_batch(df, write_batch, checkpoint)
+
+
+def _start_foreach_batch(stream: DataFrame, body, checkpoint: str | None):
+    """Start ``stream`` with ``body(batch_df, batch_id)`` as its
+    foreachBatch sink, checkpointed under ``checkpoint`` when given."""
+    writer = stream.writeStream.foreachBatch(body)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
@@ -278,14 +290,31 @@ def dedup_ingest_batch(
     of a manually-deduped frame restores exactness. For transactional
     exactly-once use a table format for the band table.
     """
-    from pyspark.sql import functions as F
-
-    from etl_data_spark.io.writers import _fs, _jpath
     from etl_data_spark.operators.dedup import (
         append_minhash_bands,
         dedup_incremental_at_rest,
     )
 
+    _gated_ingest(
+        batch_df, batch_id, layout_path, survivors_path, "doc_id",
+        lambda b: dedup_incremental_at_rest(b, layout_path, threshold),
+        append_minhash_bands, clusters_path,
+    )
+
+
+def _gated_ingest(
+    batch_df: DataFrame,
+    batch_id: int,
+    layout_path: str,
+    survivors_path: str,
+    id_col: str,
+    probe,
+    append,
+    clusters_path: str | None,
+) -> None:
+    """The body of :func:`dedup_ingest_batch` and
+    :func:`semantic_ingest_batch`; ``probe(batch_df)`` yields the
+    batch-incident pairs, ``append(survivors, layout_path)`` folds."""
     spark = batch_df.sparkSession
     marker = f"{layout_path}/_ingest_markers/batch-{batch_id}"
     fs, jm = _fs(spark, marker)
@@ -293,19 +322,17 @@ def dedup_ingest_batch(
         return
     if not batch_df.take(1):
         return
-    pairs = dedup_incremental_at_rest(batch_df, layout_path, threshold)
+    pairs = probe(batch_df)
     pairs.persist()
-    losers = _transitive_batch_losers(
-        pairs, batch_df.select(F.col("doc_id"))
-    )
-    survivors = batch_df.join(losers, "doc_id", "left_anti")
+    losers = _transitive_batch_losers(pairs, batch_df.select(F.col(id_col)))
+    survivors = batch_df.join(losers, id_col, "left_anti")
     survivors.persist()
     try:
         if survivors.take(1):
             survivors.write.mode("overwrite").parquet(
                 f"{survivors_path}/batch={batch_id}"
             )
-            append_minhash_bands(survivors, layout_path)
+            append(survivors, layout_path)
         if clusters_path is not None and pairs.take(1):
             # r13: continuous cluster-table maintenance — the batch's
             # pairs fold into the versioned (doc_id, cluster_id) table
@@ -315,8 +342,7 @@ def dedup_ingest_batch(
     finally:
         survivors.unpersist()
         pairs.unpersist()
-    out = fs.create(jm, True)
-    out.close()
+    write_text(spark, marker, "")
 
 
 def stream_dedup_ingest(
@@ -342,10 +368,7 @@ def stream_dedup_ingest(
             clusters_path,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(docs_stream, ingest_batch, checkpoint)
 
 
 def semantic_ingest_batch(
@@ -384,41 +407,18 @@ def semantic_ingest_batch(
     exactness. The retrain lifecycle (``ivf_retrain``) applies to this
     layout exactly as it does for ANN serving — one artifact, three
     consumers (ANN probes, at-rest SemDeDup, this gate)."""
-    from pyspark.sql import functions as F
-
-    from etl_data_spark.io.writers import _fs, _jpath
     from etl_data_spark.operators.similarity import (
         append_ivf_partitioned,
         semantic_dedup_incremental_at_rest,
     )
 
-    spark = batch_df.sparkSession
-    marker = f"{layout_path}/_ingest_markers/batch-{batch_id}"
-    fs, jm = _fs(spark, marker)
-    if fs.exists(jm):
-        return
-    if not batch_df.take(1):
-        return
-    pairs = semantic_dedup_incremental_at_rest(
-        batch_df, layout_path, threshold, id_col
+    _gated_ingest(
+        batch_df, batch_id, layout_path, survivors_path, id_col,
+        lambda b: semantic_dedup_incremental_at_rest(
+            b, layout_path, threshold, id_col
+        ),
+        append_ivf_partitioned, clusters_path,
     )
-    pairs.persist()
-    losers = _transitive_batch_losers(pairs, batch_df.select(F.col(id_col)))
-    survivors = batch_df.join(losers, id_col, "left_anti")
-    survivors.persist()
-    try:
-        if survivors.take(1):
-            survivors.write.mode("overwrite").parquet(
-                f"{survivors_path}/batch={batch_id}"
-            )
-            append_ivf_partitioned(survivors, layout_path)
-        if clusters_path is not None and pairs.take(1):
-            update_cluster_table(pairs, clusters_path, batch_id)
-    finally:
-        survivors.unpersist()
-        pairs.unpersist()
-    out = fs.create(jm, True)
-    out.close()
 
 
 def stream_semantic_ingest(
@@ -443,35 +443,29 @@ def stream_semantic_ingest(
             id_col, clusters_path,
         )
 
-    writer = vec_stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(vec_stream, ingest_batch, checkpoint)
 
 
 # --- continuous cluster-table maintenance (r13, ROTATION carry-over) -------
 
 
-def read_cluster_table(spark, root: str):
-    """The live (doc_id, cluster_id) table under ``root``, resolved via
-    the ``_current`` pointer (versioned dirs — the manifest-pointer
-    discipline of io/manifest.py at table granularity). Returns None
-    when no version has been published."""
-    from etl_data_spark.io.writers import _fs, _jpath
+def _cluster_version(spark, path: str):
+    """A cluster-table version is complete once its write committed
+    (``_SUCCESS``); None for a missing or half-written one."""
+    fs, p = _fs(spark, f"{path}/_SUCCESS")
+    return spark.read.parquet(path) if fs.exists(p) else None
 
-    fs, jp = _fs(spark, f"{root}/_current")
-    if not fs.exists(jp):
-        return None
-    stream = fs.open(jp)
-    try:
-        name = (
-            spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            ).strip()
-        )
-    finally:
-        stream.close()
-    return spark.read.parquet(f"{root}/{name}")
+
+def read_cluster_table(spark, root: str):
+    """The live (doc_id, cluster_id) table under ``root``: the ``vNNNNNN``
+    version the ``_current`` pointer names, resolved by the shared
+    versioned-pointer protocol of io/manifest.py — so a missing, torn or
+    dangling pointer falls back to the newest complete version, exactly
+    as a manifest table does. Returns None when no version has been
+    published."""
+    return _resolve_version(
+        spark, root, root, "v", "", lambda p: _cluster_version(spark, p)
+    )
 
 
 def update_cluster_table(pairs, root: str, batch_id: int, keep: int = 2):
@@ -488,9 +482,6 @@ def update_cluster_table(pairs, root: str, batch_id: int, keep: int = 2):
     the pointer to it — idempotent; and a crash mid-write leaves the
     old version intact behind the old pointer (old-or-new, never
     torn)."""
-    from pyspark.sql import functions as F
-
-    from etl_data_spark.io.writers import _fs, _jpath
     from etl_data_spark.operators.dedup import (
         connected_components,
         connected_components_incremental,
@@ -503,22 +494,13 @@ def update_cluster_table(pairs, root: str, batch_id: int, keep: int = 2):
     else:
         updated = connected_components_incremental(labels, pairs)
     vname = f"v{batch_id:06d}"
-    updated.write.mode("overwrite").parquet(f"{root}/{vname}")
-    fs, jp = _fs(spark, f"{root}/_current")
-    out = fs.create(jp, True)
-    try:
-        out.write(vname.encode("utf-8"))
-    finally:
-        out.close()
+    _publish_version(
+        spark, root, vname,
+        lambda: updated.write.mode("overwrite").parquet(f"{root}/{vname}"),
+    )
     # reclaim superseded versions (keep the last `keep` for in-flight
     # readers — the manifest_gc convention)
-    rootp = _jpath(spark, root)
-    if fs.exists(rootp):
-        versions = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(rootp)
-            if st.isDirectory() and st.getPath().getName().startswith("v")
-        )
-        for old in versions[:-keep]:
-            if old != vname:
-                fs.delete(_jpath(spark, f"{root}/{old}"), True)
+    fs, _ = _fs(spark, root)
+    for v in _numbered(spark, root, "v")[:-keep]:
+        if f"v{v:06d}" != vname:
+            _delete(fs, spark, f"{root}/v{v:06d}")

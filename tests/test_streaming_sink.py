@@ -472,3 +472,78 @@ def test_ingest_maintains_cluster_table_across_batches(spark, tmp_path):
         for r in read_cluster_table(spark, clusters).collect()
     }
     assert t3 == t2
+
+
+def _cluster_labels(spark, root):
+    from etl_data_spark.streaming.pipeline import read_cluster_table
+
+    return {
+        (r["doc_id"], r["cluster_id"])
+        for r in read_cluster_table(spark, root).collect()
+    }
+
+
+def test_cluster_table_survives_a_torn_pointer(spark, tmp_path):
+    """The cluster table's ``_current`` pointer gets the manifest tables'
+    fallback: blank, deleted, or naming a version that does not exist,
+    the reader resolves the newest complete version, and the next fold
+    succeeds and publishes a readable pointer (no UNABLE_TO_INFER_SCHEMA
+    wedge on every later micro-batch)."""
+    from etl_data_spark.streaming.pipeline import update_cluster_table
+
+    def pairs(*edges):
+        return spark.createDataFrame(list(edges), "id_a long, id_b long")
+
+    root = str(tmp_path / "clusters")
+    current = tmp_path / "clusters" / "_current"
+    update_cluster_table(pairs((1, 2)), root, 0)
+    update_cluster_table(pairs((2, 3), (7, 8)), root, 1)
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    assert _cluster_labels(spark, root) == want
+
+    tear = {
+        "blank": lambda: current.write_text(""),
+        "deleted": current.unlink,
+        "dangling": lambda: current.write_text("v999999"),
+    }
+    for batch_id, (state, corrupt) in enumerate(tear.items(), start=2):
+        corrupt()
+        assert _cluster_labels(spark, root) == want, state
+        update_cluster_table(pairs((8, 10 * batch_id)), root, batch_id)
+        assert current.read_text() == f"v{batch_id:06d}", state
+        want |= {(10 * batch_id, 7)}
+        assert _cluster_labels(spark, root) == want, state
+
+
+def test_cluster_table_gc_keeps_two_versions(spark, tmp_path):
+    """Four ingested batches with the default keep=2 leave exactly the two
+    newest ``vNNNNNN`` directories, ``_current`` names the newest, and a
+    marker-gated replay changes neither."""
+    from etl_data_spark.operators.dedup import write_minhash_bands
+    from etl_data_spark.streaming.pipeline import dedup_ingest_batch
+
+    schema = "doc_id long, text string"
+    text = "a base corpus document about parquet layouts " * 3
+    layout = str(tmp_path / "layout")
+    write_minhash_bands(spark.createDataFrame([(1, text)], schema), layout)
+    surv = str(tmp_path / "surv")
+    clusters = tmp_path / "clusters"
+
+    def batch(i):  # a copy of the corpus doc: a pair, nothing lands
+        return spark.createDataFrame([(100 * i, text)], schema)
+
+    def state():
+        versions = sorted(
+            p.name for p in clusters.iterdir() if p.name.startswith("v")
+        )
+        return versions, (clusters / "_current").read_text()
+
+    for i in range(1, 5):
+        dedup_ingest_batch(batch(i), i, layout, surv, clusters_path=str(clusters))
+    assert state() == (["v000003", "v000004"], "v000004")
+    before = _cluster_labels(spark, str(clusters))
+    assert (400, 1) in before
+
+    dedup_ingest_batch(batch(2), 2, layout, surv, clusters_path=str(clusters))
+    assert state() == (["v000003", "v000004"], "v000004")
+    assert _cluster_labels(spark, str(clusters)) == before
