@@ -11,6 +11,14 @@ instead of aborting the run.
 The five reference checks + summary are provided as ``reference_checks``;
 users can register arbitrary additional checks — the runner is the engine's
 general assertion surface (Spark has no CHECK constraints).
+
+``reference_checks`` folds the aggregates of DQ1-DQ3 and DQ5 into one
+shared action (the silver sum cross-joined with one aggregate over the
+fact), run by the first check that reads it; DQ4 keeps its own ``groupBy``.
+Isolation still holds per check: when the shared action raises, every check
+that reads it gets its own ``error`` row carrying that error, and the
+action is not run again. The results frame is built from literals, so the
+runner starts no Python worker.
 """
 
 from __future__ import annotations
@@ -20,8 +28,9 @@ import decimal
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_data_spark.cleanse import date_window_filter
 from etl_data_spark.schemas import DQ_RESULT_SCHEMA
@@ -140,11 +149,49 @@ def run_checks(
             error_message=f"Total: {total}, Passed: {n_passed}, Failed: {n_failed}",
         )
     )
-    rows = [vars(r) for r in results]
-    return spark.createDataFrame(rows, schema=DQ_RESULT_SCHEMA)
+    return _literal_frame(spark, results)
+
+
+def _literal_frame(spark: SparkSession, results: list[CheckResult]) -> DataFrame:
+    """``results`` as a frame of exactly ``DQ_RESULT_SCHEMA``, built from
+    literals (``inline`` over an array of structs on a one-row range): a
+    JVM-only plan, so neither building nor writing it starts a Python
+    worker."""
+    structs = [
+        F.struct(
+            *[
+                F.lit(getattr(r, f.name)).cast(f.dataType).alias(f.name)
+                for f in DQ_RESULT_SCHEMA.fields
+            ]
+        )
+        for r in results
+    ]
+    # the cast pins each field's nullability to the declared schema
+    rows = F.array(*structs).cast(T.ArrayType(DQ_RESULT_SCHEMA, containsNull=False))
+    return spark.range(1, numPartitions=1).select(F.inline(rows))
 
 
 # --- the five reference checks ------------------------------------------------
+
+
+def _once(action: Callable[[], Row]) -> Callable[[], Row]:
+    """``action`` run at most once: later calls return its row, or raise
+    the error it raised, so each check reading a failed scan gets its own
+    ``error`` row without running the scan again."""
+    outcome: list[tuple[Row | None, Exception | None]] = []
+
+    def get() -> Row:
+        if not outcome:
+            try:
+                outcome.append((action(), None))
+            except Exception as exc:
+                outcome.append((None, exc))
+        row, exc = outcome[0]
+        if exc is not None:
+            raise exc
+        return row
+
+    return get
 
 
 def reference_checks(
@@ -157,23 +204,37 @@ def reference_checks(
     s = date_window_filter(silver, start_date, end_date)
     f_ = date_window_filter(fact, start_date, end_date)
 
-    def sums() -> tuple[float, float]:
-        exp = s.agg(F.coalesce(F.sum("purchase_amount"), F.lit(0))).first()[0]
-        act = f_.agg(F.coalesce(F.sum("purchase_amount"), F.lit(0))).first()[0]
-        return float(exp), float(act)
-
-    def null_rate() -> tuple[None, float | None]:
-        row = f_.agg(
+    def scan() -> Row:
+        # every aggregate of DQ1-DQ3 and DQ5 in one action: silver's sum
+        # cross-joined with one aggregate over the fact
+        zero = F.lit(0)
+        exp = s.agg(F.coalesce(F.sum("purchase_amount"), zero).alias("exp"))
+        act = f_.agg(
+            F.coalesce(F.sum("purchase_amount"), zero).alias("act"),
             F.count(F.when(F.col("customer_id").isNull(), 1)).alias("nulls"),
             F.count(F.lit(1)).alias("total"),
-        ).first()
+            F.count(F.when(F.col("effective_to") < F.col("effective_from"), 1)).alias(
+                "bad_dates"
+            ),
+            F.count(
+                F.when((F.col("salary") < 0) | (F.col("salary") > 1000000), 1)
+            ).alias("bad_salary"),
+        )
+        return exp.crossJoin(act).first()
+
+    shared = _once(scan)
+
+    def sums() -> tuple[float, float]:
+        row = shared()
+        return float(row["exp"]), float(row["act"])
+
+    def null_rate() -> tuple[None, float | None]:
+        row = shared()
         rate = None if row["total"] == 0 else row["nulls"] * 100.0 / row["total"]
         return None, rate
 
     def bad_dates() -> tuple[None, float]:
-        return None, float(
-            f_.filter(F.col("effective_to") < F.col("effective_from")).count()
-        )
+        return None, float(shared()["bad_dates"])
 
     def dup_groups() -> tuple[None, float]:
         return None, float(
@@ -184,9 +245,7 @@ def reference_checks(
         )
 
     def bad_salary() -> tuple[None, float]:
-        return None, float(
-            f_.filter((F.col("salary") < 0) | (F.col("salary") > 1000000)).count()
-        )
+        return None, float(shared()["bad_salary"])
 
     return [
         CheckSpec(

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_data_spark.io.writers import observe_counts
+
 
 @dataclass
 class IngestReport:
@@ -39,28 +41,31 @@ def validity_predicate() -> F.Column:
 def ingest_bronze(df: DataFrame, path: str | None = None) -> tuple[DataFrame, IngestReport]:
     """Filter invalid rows, optionally persist bronze, report counts.
 
-    r13 (guide §1.2 — don't compute things twice): loaded and rejected
-    used to be two separate ``count()`` actions, i.e. two full
-    evaluations of the upstream plan (for the generated source that is
-    two full hash-RNG passes) before the write's third. One aggregation
-    computes both counts in a single pass; the same validity predicate
-    drives the filter and the conditional count, so the report is
-    value-identical.
+    One pass over ``df`` either way: the same validity predicate drives
+    the filter and the conditional count, so the report is value-identical
+    to counting loaded and rejected rows separately.
 
-    Caveat: the predicate is evaluated in two separate actions (the agg
-    here, the filter at write time), so a NONDETERMINISTIC source could
-    make ``loaded`` diverge from the rows actually written — the same
-    exposure the old two-count form had (three evaluations), acceptable
-    only because the generated source is deterministic. A real streaming
-    source should materialize once (write bronze first, count from the
-    written files)."""
-    ok = df.filter(validity_predicate())
-    row = df.agg(
+    With a ``path`` the counts are an ``Observation`` on the frame being
+    written, so the write is the only action, and the returned bronze is
+    the table read back from ``path``: later layers scan the written files
+    instead of evaluating ``df`` again, and ``loaded`` is by construction
+    the number of rows written, even for a nondeterministic source.
+
+    With no path the counts are one aggregate over ``df`` and the returned
+    bronze is the lazy filtered ``df``; each later action evaluates ``df``
+    again, so ``loaded`` matches what those actions see only for a
+    deterministic source (the generated one is)."""
+    ok_rows = validity_predicate()
+    counts = (
         F.count(F.lit(1)).alias("total"),
-        F.count(F.when(validity_predicate(), F.lit(1))).alias("loaded"),
-    ).first()
-    loaded = row["loaded"]
-    rejected = row["total"] - loaded
-    if path is not None:
-        ok.write.mode("overwrite").parquet(path)
-    return ok, IngestReport(loaded=loaded, rejected=rejected)
+        F.count(F.when(ok_rows, F.lit(1))).alias("loaded"),
+    )
+    if path is None:
+        row = df.agg(*counts).first()
+        ok = df.filter(ok_rows)
+    else:
+        observed, observed_counts = observe_counts(df, *counts)
+        observed.filter(ok_rows).write.mode("overwrite").parquet(path)
+        row = observed_counts()
+        ok = df.sparkSession.read.schema(df.schema).parquet(path)
+    return ok, IngestReport(loaded=row["loaded"], rejected=row["total"] - row["loaded"])

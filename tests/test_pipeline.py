@@ -491,3 +491,184 @@ def test_compact_small_files_recovers_crashed_swap(spark, tmp_path):
     assert n_files >= 1
     assert spark.read.parquet(path).count() == n
     assert not Path(path + "__pre_compact").exists()
+
+
+def test_overwrite_by_window_after_crashed_first_write(spark, tmp_path):
+    """A first export killed mid-write leaves the target holding only
+    ``_temporary/0``; with no live month directory it is a fresh table, so
+    the next export writes it instead of failing to read a schema."""
+    from pathlib import Path
+
+    path = tmp_path / "t_wedged"
+    (path / "_temporary" / "0").mkdir(parents=True)
+    schema = "k int, effective_from date, effective_to date"
+    rows = spark.createDataFrame(
+        [
+            (1, dt.date(2023, 1, 5), dt.date(2023, 1, 6)),
+            (2, dt.date(2023, 2, 5), dt.date(2023, 2, 6)),
+        ],
+        schema,
+    )
+    n = overwrite_by_window(spark, rows, str(path), "2023-01-01", "2023-12-31")
+    assert n == 2
+    assert {r["k"] for r in spark.read.parquet(str(path)).collect()} == {1, 2}
+    assert not (Path(path) / "_temporary").exists()
+
+
+def test_overwrite_by_window_fresh_empty_batch(spark, tmp_path):
+    """The fresh-table branch counts the batch with an Observation on the
+    write; an empty batch still reports 0."""
+    schema = "k int, effective_from date, effective_to date"
+    empty = spark.createDataFrame([], schema)
+    path = str(tmp_path / "t_empty")
+    assert overwrite_by_window(spark, empty, path, "2023-01-01", "2023-12-31") == 0
+    assert overwrite_by_window(spark, empty, path, None, None) == 0
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    """A warehouse run evaluates each layer once: counts ride the writes,
+    later layers read what was written, DQ folds its aggregates. The run
+    used to submit 59 jobs; the bound leaves room for small plan drift.
+    The counts it reports still equal separate counts of its inputs and
+    outputs."""
+    from etl_data_spark.ingest import validity_predicate
+
+    wh = tmp_path / "wh"
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "run_pipeline job budget")
+    try:
+        res = run_pipeline(spark, rows=300, seed=7, warehouse=str(wh))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 36, len(jobs)
+
+    src = generate_source(spark, rows=300, seed=7).agg(
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(validity_predicate(), 1)).alias("loaded"),
+    ).first()
+    report = res.ingest_report
+    assert report.loaded + report.rejected == src["total"]
+    assert report.loaded == src["loaded"]
+    assert res.silver_count == spark.read.parquet(str(wh / "silver")).count() > 0
+    assert res.exported_count == res.silver_count
+
+
+def _per_check_actions(silver, fact):
+    """DQ1-DQ5 each computed by its own actions: the form the folded
+    ``reference_checks`` must agree with, value for value."""
+    s = date_window_filter(silver, "2023-01-01", "2023-12-31")
+    f_ = date_window_filter(fact, "2023-01-01", "2023-12-31")
+    exp = s.agg(F.coalesce(F.sum("purchase_amount"), F.lit(0))).first()[0]
+    act = f_.agg(F.coalesce(F.sum("purchase_amount"), F.lit(0))).first()[0]
+    nulls = f_.agg(
+        F.count(F.when(F.col("customer_id").isNull(), 1)).alias("nulls"),
+        F.count(F.lit(1)).alias("total"),
+    ).first()
+    return [
+        (float(exp), float(act)),
+        (None, None if nulls["total"] == 0 else nulls["nulls"] * 100.0 / nulls["total"]),
+        (None, float(f_.filter(F.col("effective_to") < F.col("effective_from")).count())),
+        (
+            None,
+            float(
+                f_.groupBy("fact_id", "customer_id", "effective_from")
+                .count()
+                .filter(F.col("count") > 1)
+                .count()
+            ),
+        ),
+        (
+            None,
+            float(f_.filter((F.col("salary") < 0) | (F.col("salary") > 1000000)).count()),
+        ),
+    ]
+
+
+def test_dq_folded_checks_match_per_check_actions(spark, silver):
+    from etl_data_spark.dq import reference_checks
+
+    bad = silver.withColumn(
+        "salary", F.when(F.col("id") % 10 == 0, -5).otherwise(F.col("salary"))
+    )
+    fact = build_star(bad).fact.cache()
+    try:
+        folded = [
+            c.compute() for c in reference_checks(bad, fact, "2023-01-01", "2023-12-31")
+        ]
+        assert folded == _per_check_actions(bad, fact)
+        assert folded[4][1] > 0  # the injected salary violations are seen
+    finally:
+        fact.unpersist()
+
+
+def test_run_checks_isolates_a_raising_check(spark):
+    from etl_data_spark.dq import CheckSpec, run_checks
+
+    def boom():
+        raise RuntimeError("source unavailable")
+
+    checks = [
+        CheckSpec("correctness", "ok one", lambda: (1.0, 1.0), lambda e, a: e == a),
+        CheckSpec("completeness", "raises", boom, lambda e, a: True),
+        CheckSpec("validity", "ok two", lambda: (None, 0.0), lambda e, a: a == 0),
+    ]
+    rows = {r["check_name"]: r for r in run_checks(spark, checks).collect()}
+    assert [rows[n]["status"] for n in ("ok one", "raises", "ok two")] == [
+        "passed",
+        "error",
+        "passed",
+    ]
+    assert "source unavailable" in rows["raises"]["error_message"]
+    assert rows["raises"]["expected_value"] is None
+    summary = rows["Overall DQ check"]
+    assert summary["status"] == "failed"
+    assert summary["error_message"] == "Total: 3, Passed: 2, Failed: 1"
+
+
+def test_dq_shared_scan_error_reaches_every_reader(spark, silver):
+    """When the shared DQ action raises, each check that reads it gets
+    its own error row; the duplicate check, with its own action, still
+    runs."""
+    from etl_data_spark.dq import reference_checks, run_checks
+
+    fact = build_star(silver).fact
+    broken = silver.drop("purchase_amount")  # the silver sum cannot resolve
+    rows = {
+        r["check_type"]: r
+        for r in run_checks(spark, reference_checks(broken, fact)).collect()
+    }
+    readers = ["correctness", "completeness", "consistency", "validity"]
+    assert [rows[t]["status"] for t in readers] == ["error"] * 4
+    assert len({rows[t]["error_message"] for t in readers}) == 1
+    assert "purchase_amount" in rows["correctness"]["error_message"]
+    assert rows["uniqueness"]["status"] == "passed"
+    assert rows["summary"]["error_message"] == "Total: 5, Passed: 1, Failed: 4"
+
+
+def test_run_checks_plan_is_jvm_only(spark):
+    """The results frame is built from literals: its executed plan scans
+    no RDD of Python rows, so writing or collecting it starts no Python
+    worker, and it carries exactly the declared schema."""
+    from etl_data_spark.dq import CheckSpec, run_checks
+    from etl_data_spark.schemas import DQ_RESULT_SCHEMA
+
+    checks = [
+        CheckSpec("correctness", "sum", lambda: (2.5, 2.5), lambda e, a: e == a,
+                  table_name="t", threshold=0.01),
+        CheckSpec("validity", "none", lambda: (None, None), lambda e, a: True),
+    ]
+    when = dt.datetime(2024, 1, 2, 3, 4, 5)
+    res = run_checks(spark, checks, execution_date=when)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert res.schema == DQ_RESULT_SCHEMA
+    got = sorted(res.collect(), key=lambda r: r["check_id"])
+    assert [r["check_id"] for r in got] == [1, 2, 3]
+    assert {r["execution_date"] for r in got} == {when}
+    assert str(got[0]["expected_value"]) == "2.5000"
+    assert str(got[0]["error_threshold"]) == "0.0100"
+    assert got[1]["actual_value"] is None
+    assert got[2]["error_message"] == "Total: 2, Passed: 2, Failed: 0"
