@@ -27,6 +27,7 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from etl_data_spark.io import layout as L
@@ -504,33 +505,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def star_contraction(
-    edges: DataFrame, max_iter: int = 50
-) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star contraction to star graphs.
+def _star_rounds(edges: DataFrame, max_iter: int):
+    """Alternating large-star/small-star rounds over canonical (hi, lo)
+    edges: yields ``(edges, n_edges, rounds, converged)`` for the cut
+    input (round 0) and after every round, and raises once ``max_iter``
+    rounds pass without convergence. The one round loop behind
+    :func:`star_contraction` (which runs it to convergence) and
+    :func:`connected_components` (which may stop it early and finish with
+    one union-find task).
 
-    Converges in O(log^2 n) rounds REGARDLESS of component diameter — the
-    upgrade over min-label propagation (O(diameter) rounds), which
-    degenerates on long-chain components (a 10k-node chain needs 10k
-    label-propagation rounds but ~2*log2(n) star rounds; pinned by
-    tests/test_operators.py::test_star_contraction_chain_rounds).
-
-    Input: canonical (hi, lo) pairs, hi > lo. Output: (star_edges, rounds)
-    where star_edges maps every non-root node (hi) to its component
-    minimum (lo). Convergence is detected by an edge-set checksum (count +
-    xor of xxhash64 — overflow-proof under ANSI mode; the edge set is
-    distinct, so set equality is what's being tested).
-
-    r13 (guide §1.2 — fewer actions): each round PERSISTS its edge set
-    and computes the convergence checksum in the same action (the agg
-    materializes the cache), instead of an eager localCheckpoint action
-    followed by a separate checksum action — one driver round-trip per
-    round, not two. Lineage is still truncated every 4th round (and for
-    the returned frame) so the logical plan stays bounded for the long
-    contractions ``max_iter`` allows; superseded round caches are
-    released eagerly (the frame handed back to the caller keeps its
-    cache and is released by the consumer's ``release_all``, the
-    operator self-containment contract).
+    Convergence is detected by an edge-set checksum (count + xor of
+    xxhash64 — overflow-proof under ANSI mode; the edge set is distinct,
+    so set equality is what's being tested). Each round PERSISTS its edge
+    set and computes the checksum in the same action (the agg
+    materializes the cache) — one driver round-trip per round. Lineage is
+    truncated every 4th round so the logical plan stays bounded for the
+    long contractions ``max_iter`` allows; a superseded round's cache is
+    released when the next round is checksummed (the frame last yielded
+    keeps its cache and is released by the consumer's ``release_all``,
+    the operator self-containment contract).
     """
     edges = truncate_lineage(edges)
 
@@ -542,11 +535,9 @@ def star_contraction(
         return row["n"], row["h"]
 
     sig = _sig(edges)
-    rounds = 0
-    converged = False
+    yield edges, sig[0], 0, False
     prev_cached: DataFrame | None = None
     for r in range(max_iter):
-        rounds += 1
         nxt = _small_star(_large_star(edges))
         if (r + 1) % 4 == 0:
             nxt = truncate_lineage(nxt)
@@ -557,22 +548,114 @@ def star_contraction(
             prev_cached.unpersist()
         prev_cached = nxt if (r + 1) % 4 != 0 else None
         edges = nxt
+        yield edges, new_sig[0], r + 1, new_sig == sig
         if new_sig == sig:
-            converged = True
-            break
+            return
         sig = new_sig
-    if not converged:
-        # Unconverged star edges would silently mislabel clusters (a hi
-        # still pointing at a non-root lo) — for dedup that means keeping
-        # duplicates or dropping survivors. Fail loudly instead; the
-        # O(log^2 n) bound means hitting this indicates max_iter far too
-        # small for the graph, not a marginal miss.
-        raise RuntimeError(
-            f"star_contraction did not converge within max_iter={max_iter} "
-            "rounds; raise max_iter (rounds needed grow ~2*log2(n), so even "
-            "planet-scale graphs fit comfortably in the default 50)"
+    # Unconverged star edges would silently mislabel clusters (a hi still
+    # pointing at a non-root lo) — for dedup that means keeping duplicates
+    # or dropping survivors. Fail loudly instead; the O(log^2 n) bound
+    # means hitting this indicates max_iter far too small for the graph,
+    # not a marginal miss.
+    raise RuntimeError(
+        f"star_contraction did not converge within max_iter={max_iter} "
+        "rounds; raise max_iter (rounds needed grow ~2*log2(n), so even "
+        "planet-scale graphs fit comfortably in the default 50)"
+    )
+
+
+def star_contraction(
+    edges: DataFrame, max_iter: int = 50
+) -> tuple[DataFrame, int]:
+    """Alternating large-star/small-star contraction to star graphs.
+
+    Converges in O(log^2 n) rounds REGARDLESS of component diameter — the
+    upgrade over min-label propagation (O(diameter) rounds), which
+    degenerates on long-chain components (a 4096-node chain needs 4096
+    label-propagation rounds but ~2*log2(n) star rounds; pinned by
+    tests/test_operators.py::test_star_contraction_skewed_components).
+
+    Input: canonical (hi, lo) pairs, hi > lo. Output: (star_edges, rounds)
+    where star_edges maps every non-root node (hi) to its component
+    minimum (lo). Rounds, checksums and caching are :func:`_star_rounds`,
+    run here until the edge set stops changing.
+    """
+    for stars, _, rounds, converged in _star_rounds(edges, max_iter):
+        if converged:
+            break
+    return stars, rounds
+
+
+# Edge rows at or below which one task labels the graph with union-find:
+# 2^20 pairs of int64 ids are ~16 MB of Arrow input, so the finish stays
+# well inside one Python worker while a graph this small would otherwise
+# pay ~2 Spark jobs per contraction round at the engine's latency floor.
+_FINISH_MAX_EDGES = 1 << 20
+
+
+def _union_find_labels(edges: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every id in the (a, b) ``edges``, computed
+    by ONE task: the whole edge set goes to a single ``applyInArrow``
+    group (callers bound it by :data:`_FINISH_MAX_EDGES`). ``cluster_id``
+    is the minimum id of the component. Ids are factorized by
+    ``np.unique`` (sorted, so a smaller index is a smaller id), then
+    vectorized union-find: every edge hooks the larger of its two roots
+    under the smaller (``np.minimum.at``), and pointer jumping compresses
+    every node to its root, until no edge spans two roots. A parent never
+    exceeds its node, so each component's minimum is its one root.
+
+    Null ids follow the contraction path's semantics: a pair with a null
+    end links nothing, its non-null end is still a node, and any null
+    yields one ``(null, null)`` row.
+    """
+    id_type = edges.schema["a"].dataType
+    nullable = edges.schema["a"].nullable or edges.schema["b"].nullable
+    schema = StructType(
+        [
+            StructField("doc_id", id_type, nullable),
+            StructField("cluster_id", id_type, nullable),
+        ]
+    )
+
+    def label(tbl):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        a = tbl.column("a").combine_chunks()
+        b = tbl.column("b").combine_chunks()
+        linked = pc.and_(pc.is_valid(a), pc.is_valid(b))
+        ids = pa.concat_arrays([a, b])
+        present = ids.drop_null()
+        uniq, first = np.unique(
+            present.to_numpy(zero_copy_only=False), return_index=True
         )
-    return edges, rounds
+        ia, ib = (
+            np.searchsorted(uniq, c.filter(linked).to_numpy(zero_copy_only=False))
+            for c in (a, b)
+        )
+        parent = np.arange(len(uniq))
+        while True:
+            ra, rb = parent[ia], parent[ib]
+            span = ra != rb
+            if not span.any():
+                break
+            np.minimum.at(
+                parent, np.maximum(ra, rb)[span], np.minimum(ra, rb)[span]
+            )
+            while True:
+                jumped = parent[parent]
+                if np.array_equal(jumped, parent):
+                    break
+                parent = jumped
+        doc = present.take(pa.array(first))
+        cluster = doc.take(pa.array(parent))
+        if len(present) < len(ids):
+            doc = pa.concat_arrays([doc, pa.nulls(1, doc.type)])
+            cluster = pa.concat_arrays([cluster, pa.nulls(1, doc.type)])
+        return pa.Table.from_arrays([doc, cluster], ["doc_id", "cluster_id"])
+
+    return edges.groupBy(F.lit(0).alias("_uf")).applyInArrow(label, schema)
 
 
 def connected_components(
@@ -584,45 +667,71 @@ def connected_components(
     """(doc_id, cluster_id) for every document in a near-dup pair; cluster_id
     is the minimum doc id reachable through the pair graph.
 
-    Implemented as alternating large-star/small-star contraction (Kiveris
-    et al. 2014) — O(log^2 n) rounds independent of component diameter, so
-    skewed/chain-shaped components cost the same as the clique-shaped ones
-    near-dup graphs usually produce (the r5 min-label implementation was
-    O(diameter); see star_contraction). Each round shuffles the current
-    edge set keyed by node id; no step materializes a neighborhood larger
-    than the node's degree, and the edge set only shrinks toward one edge
-    per non-root node — 100 TB-safe.
+    **One read of the input.** The ``(id_a, id_b)`` projection is cut once
+    (``truncate_lineage``); the bounded count, the finish, the contraction
+    and the node set all read the cut frame, so the pair plan (band join,
+    Jaccard verify) runs exactly once per call.
+
+    **Small graphs: one task.** When the cut holds at most
+    :data:`_FINISH_MAX_EDGES` rows (``limit(cap + 1).count()``, which
+    stops reading at the cap), one union-find task labels every node
+    (:func:`_union_find_labels`). Below the cap a contraction round costs
+    more in per-job latency than its data, and one task's memory is
+    bounded by the cap.
+
+    **Large graphs: contract, then finish.** Above the cap the graph is
+    contracted by alternating large-star/small-star rounds (Kiveris et al.
+    2014; :func:`_star_rounds`) — O(log^2 n) rounds independent of
+    component diameter, each shuffling the edge set keyed by node id, no
+    step materializing a neighborhood larger than the node's degree, and
+    the edge set shrinking toward one edge per non-root node — 100 TB-safe.
+    Contraction keeps every node and its component, so as soon as a
+    round's checksum count (already computed, no extra action) is at or
+    below the cap, the union-find task finishes from that round's edges;
+    a node in no edge (a self-pair only, or null) labels itself.
 
     This is the step that turns pairwise similarity output into dedup
     groups (keep min-id per cluster, drop the rest).
     """
-    canonical = (
+    # both ends as the wider id type, the type the node union always had
+    id_type = pairs.select(F.greatest(id_a, id_b)).schema[0].dataType
+    cut = truncate_lineage(
         pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("hi"),
-            F.least(F.col(id_a), F.col(id_b)).alias("lo"),
+            F.col(id_a).cast(id_type).alias("a"),
+            F.col(id_b).cast(id_type).alias("b"),
+        )
+    )
+    if cut.limit(_FINISH_MAX_EDGES + 1).count() <= _FINISH_MAX_EDGES:
+        return truncate_lineage(_union_find_labels(cut))
+
+    canonical = (
+        cut.select(
+            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
         )
         .filter(F.col("hi") != F.col("lo"))
         .distinct()
     )
-    nodes = (
-        pairs.select(F.col(id_a).alias("node"))
-        .union(pairs.select(F.col(id_b).alias("node")))
-        .distinct()
-    )
-    nodes = pin(nodes, StorageLevel.MEMORY_AND_DISK)
-
-    stars, _ = star_contraction(canonical, max_iter=max_iter)
-    labels = nodes.join(
-        stars.select(F.col("hi").alias("node"), F.col("lo").alias("root")),
-        "node",
-        "left",
-    ).select(
+    for stars, n_edges, _, converged in _star_rounds(canonical, max_iter):
+        if n_edges <= _FINISH_MAX_EDGES:
+            roots = _union_find_labels(
+                stars.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
+            ).select(
+                F.col("doc_id").alias("node"), F.col("cluster_id").alias("root")
+            )
+            break
+        if converged:
+            roots = stars.select(
+                F.col("hi").alias("node"), F.col("lo").alias("root")
+            )
+            break
+    nodes = cut.select(F.col("a").alias("node")).union(
+        cut.select(F.col("b").alias("node"))
+    ).distinct()
+    labels = nodes.join(roots, "node", "left").select(
         F.col("node").alias("doc_id"),
         F.coalesce("root", "node").alias("cluster_id"),
     )
-    result = truncate_lineage(labels)
-    nodes.unpersist()
-    return result
+    return truncate_lineage(labels)
 
 
 def dedup_survivors(

@@ -3151,7 +3151,6 @@ def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weiszfeld(e: DataFrame) -> DataFrame:
-    dims = _ANN_DIM
     c0_rows = (
         e.select(F.posexplode("embedding").alias("pos", "val"))
         .groupBy((F.col("pos") + 1).alias("dim"))
@@ -3164,11 +3163,24 @@ def _weiszfeld(e: DataFrame) -> DataFrame:
                 ).cast("double")
                 / F.count(F.lit(1)),
                 9,
-            ).alias("val")
+            ).alias("val"),
+            F.count(F.lit(1)).alias("n"),
         )
         .orderBy("dim")
         .collect()
     )
+    # Every vector must cover every dim: zip_with pads a short vector
+    # with nulls, its distance degenerates to the 1e-12 floor and its
+    # weight to 1e12, which overflows the decimal sums under ANSI and
+    # drags the median onto it without. Equal widths give every dim the
+    # same count, checked on the rows already collected here.
+    widths = {r["n"] for r in c0_rows}
+    if len(widths) > 1:
+        raise ValueError(
+            "geometric median needs equal-width embeddings; per-dim vector "
+            f"counts range {min(widths)}..{max(widths)} over "
+            f"{len(c0_rows)} dims"
+        )
     c = [r["val"] for r in c0_rows]
     for _t in range(_GEOMED_ITERS):
         carr = F.expr(_sx.dbl_array(c))

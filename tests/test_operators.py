@@ -1370,6 +1370,74 @@ def test_star_contraction_skewed_components(spark):
     assert cc == truth
 
 
+def test_connected_components_reads_its_input_once(spark):
+    """The pair plan feeding connected_components (in production a band
+    join plus Jaccard verify) is evaluated once per call: a pass-through
+    tap on the input counts every row it hands on, and one call must
+    read each row exactly once (the contraction-only form read it three
+    times, for the canonical edges and both sides of the node union)."""
+    from etl_data_spark.operators import dedup as D
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    rows = [(1, 2), (2, 3), (3, 3), (10, 11), (20, 21), (21, 22), (2, 1)]
+    base = spark.createDataFrame(rows, "id_a long, id_b long").repartition(3)
+    labels = D.connected_components(base.mapInArrow(tap, base.schema))
+    assert len(labels.collect()) == 8
+    assert acc.value == len(rows)
+
+
+def test_connected_components_job_budget(spark, tmp_path):
+    """A small graph costs a handful of jobs: cut the input, the bounded
+    count, the union-find task and the caller's collect. Contraction to
+    convergence used 27 jobs on the same frame."""
+    from etl_data_spark.operators import dedup as D
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23), (20, 23)],
+        "id_a long, id_b long",
+    ).persist()
+    try:
+        pairs.count()
+        sc = spark.sparkContext
+        group = f"cc-budget-{tmp_path.name}"
+        sc.setJobGroup(group, "connected_components job budget")
+        try:
+            got = dict(map(tuple, D.connected_components(pairs).collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 6, len(jobs)
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 23: 20}
+    finally:
+        pairs.unpersist()
+
+
+def test_geometric_median_refuses_ragged_embeddings(spark):
+    """A vector shorter than the rest must fail with a clear error: zip_with
+    pads it with nulls, its distance collapses to the 1e-12 floor and its
+    weight to 1e12, which overflows the decimal sums under ANSI and drags
+    the median onto it without. Equal widths still return one coordinate
+    per dim."""
+    import pytest as _pytest
+
+    from etl_data_spark.queries_llm import _weiszfeld
+
+    vecs = [(1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0])]
+    ddl = "vec_id long, embedding array<float>"
+    ok = _weiszfeld(spark.createDataFrame(vecs, ddl)).collect()
+    assert [r["dim"] for r in ok] == [1, 2, 3]
+    ragged = spark.createDataFrame(vecs + [(4, [5.0, 5.0])], ddl)
+    with _pytest.raises(ValueError, match="equal-width"):
+        _weiszfeld(ragged).collect()
+
+
 def test_kmeans_refine_improves_objective(spark):
     """Lloyd iterations must not decrease the spherical k-means objective
     (mean cosine to assigned centroid), and usually strictly improve it

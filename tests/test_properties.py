@@ -11,6 +11,7 @@ ANY input, not just the seeded fixtures.
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -245,22 +246,23 @@ def test_ngram_array_matches_reference(spark, docs, n):
 # --- connected components: star contraction == union-find, any graph --------
 
 
-@PROP_SETTINGS
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 39), st.integers(0, 39)),
-        min_size=0,
-        max_size=80,
-    )
+# connected_components labels a graph of at most _FINISH_MAX_EDGES pair rows
+# in one union-find task and contracts larger ones: cap 0 forces every
+# graph through contraction, the default sends these small ones to the
+# finish. Both paths must give the same labels.
+FINISH_CAPS = pytest.mark.parametrize(
+    "cap", [0, None], ids=["contract", "finish"]
 )
-def test_star_contraction_matches_union_find(spark, edges):
-    """For ANY small graph (self-loops, duplicates, multi-component,
-    chains), connected_components must assign every node its component's
-    minimum id — the union-find ground truth. This is the algebraic
-    contract the dedup-clustering oracles rely on; the seeded fixtures
-    only cover clique-shaped near-dup graphs."""
-    from etl_data_spark.operators.dedup import connected_components
 
+
+def _set_finish_cap(monkeypatch, cap):
+    from etl_data_spark.operators import dedup
+
+    if cap is not None:
+        monkeypatch.setattr(dedup, "_FINISH_MAX_EDGES", cap)
+
+
+def _union_find_truth(edges):
     parent = {}
 
     def find(x):
@@ -274,9 +276,28 @@ def test_star_contraction_matches_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = {n for e in edges for n in e}
-    truth = {x: find(x) for x in nodes}
+    return {x: find(x) for e in edges for x in e}
 
+
+@FINISH_CAPS
+@PROP_SETTINGS
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 39), st.integers(0, 39)),
+        min_size=0,
+        max_size=80,
+    )
+)
+def test_star_contraction_matches_union_find(spark, monkeypatch, cap, edges):
+    """For ANY small graph (self-loops, duplicates, multi-component,
+    chains), connected_components must assign every node its component's
+    minimum id — the union-find ground truth — on the contraction path
+    and on the one-task finish alike. This is the algebraic contract the
+    dedup-clustering oracles rely on; the seeded fixtures only cover
+    clique-shaped near-dup graphs."""
+    from etl_data_spark.operators.dedup import connected_components
+
+    _set_finish_cap(monkeypatch, cap)
     pairs = spark.createDataFrame(
         edges or [(None, None)], "id_a int, id_b int"
     ).dropna()
@@ -284,7 +305,81 @@ def test_star_contraction_matches_union_find(spark, edges):
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(pairs).collect()
     }
-    assert got == truth
+    assert got == _union_find_truth(edges)
+
+
+def test_contraction_hands_over_to_union_find_mid_way(spark, monkeypatch):
+    """A cap between the input's edge count and the converged one stops
+    contraction after a few rounds and finishes with union-find: the
+    4096-node chain + cliques + blob graph of
+    test_star_contraction_skewed_components (4483 canonical edges, 4315
+    after round 2, 4303 once converged at round 13) must still get exact
+    labels."""
+    import random
+
+    from etl_data_spark.operators import dedup
+
+    edges = [(i, i + 1) for i in range(4095)]
+    for base, k in ((10_000, 12), (20_000, 8)):
+        edges += [(base + i, base + j) for i in range(k) for j in range(i + 1, k)]
+    rng = random.Random(7)
+    blob = [30_000 + i for i in range(200)]
+    edges += [tuple(rng.sample(blob, 2)) for _ in range(300)]
+
+    seen = []
+    rounds = dedup._star_rounds
+
+    def spy(edges, max_iter):
+        for step in rounds(edges, max_iter):
+            seen.append(step[1:])
+            yield step
+
+    monkeypatch.setattr(dedup, "_FINISH_MAX_EDGES", 4350)
+    monkeypatch.setattr(dedup, "_star_rounds", spy)
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(8)
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.connected_components(pairs).collect()
+    }
+    assert got == _union_find_truth(edges)
+    # handed over after a contraction round, before convergence
+    n_edges, last_round, converged = seen[-1]
+    assert n_edges <= 4350 and last_round >= 1 and not converged, seen
+
+
+# rows the contraction-only implementation returned for these inputs: a
+# null end links nothing but keeps its non-null end as a node, and any
+# null id yields one (None, None) row; string ids take the minimum in
+# binary order
+PARENT_ROWS = {
+    "null_ids": (
+        [(1, None), (None, None), (2, 3), (None, 4), (4, 5)],
+        "id_a long, id_b long",
+        "struct<doc_id:bigint,cluster_id:bigint>",
+        [(1, 1), (2, 2), (3, 2), (4, 4), (5, 4), (None, None)],
+    ),
+    "string_ids": (
+        [("b", "a"), ("c", "b"), ("zz", "Z"), ("\u00e9", "e"), ("x", None), ("q", "q")],
+        "id_a string, id_b string",
+        "struct<doc_id:string,cluster_id:string>",
+        [
+            ("Z", "Z"), ("a", "a"), ("b", "a"), ("c", "a"), ("e", "e"),
+            ("q", "q"), ("x", "x"), ("zz", "Z"), ("\u00e9", "e"), (None, None),
+        ],
+    ),
+}
+
+
+@FINISH_CAPS
+@pytest.mark.parametrize("case", sorted(PARENT_ROWS))
+def test_connected_components_odd_ids_keep_parent_rows(spark, monkeypatch, cap, case):
+    from etl_data_spark.operators.dedup import connected_components
+
+    _set_finish_cap(monkeypatch, cap)
+    rows, ddl, out_schema, expected = PARENT_ROWS[case]
+    out = connected_components(spark.createDataFrame(rows, ddl))
+    assert out.schema.simpleString() == out_schema
+    assert sorted(map(tuple, out.collect()), key=repr) == sorted(expected, key=repr)
 
 
 # --- PNG codec: decode(filtered-encode(img)) == img for ANY image/filter ----

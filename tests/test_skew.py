@@ -1,6 +1,7 @@
 """Salted join / two-phase agg must be result-identical to the plain forms,
 and must actually scatter the hot key across salt buckets."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_data_spark.operators.skew import (
@@ -106,17 +107,24 @@ def test_two_phase_agg_equals_plain_agg(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, two.collect()))
 
 
-def test_star_contraction_hub_graph_no_window(spark):
+@pytest.mark.parametrize("cap", [0, None], ids=["contract", "finish"])
+def test_star_contraction_hub_graph_no_window(spark, monkeypatch, cap):
     """r14 (VERDICT r13 #1): hub-shaped graphs — one node adjacent to every
     other, exactly the shape contraction converges TO — must (a) label
     correctly and (b) never route a hub's whole neighborhood into a single
     sorted window partition (windows cannot be skew-split; the min is a
-    partial-aggregated groupBy + AQE-splittable join instead)."""
+    partial-aggregated groupBy + AQE-splittable join instead). The 100k
+    edges fit the one-task union-find finish, so cap 0 keeps the
+    contraction rounds covered on the same hubs."""
+    from etl_data_spark.operators import dedup
     from etl_data_spark.operators.dedup import (
         _large_star,
         _small_star,
         connected_components,
     )
+
+    if cap is not None:
+        monkeypatch.setattr(dedup, "_FINISH_MAX_EDGES", cap)
 
     n = 100_000
     # hub = the component MINIMUM (the converged star orientation):
