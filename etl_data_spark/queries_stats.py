@@ -1645,18 +1645,20 @@ def _bfs_sql(max_hops: int = _BFS_MAX_HOPS) -> str:
     """BFS oracle: the frontier expansion UNROLLED into chained CTEs
     (d0..dN), one join + anti-membership check per level — the same
     no-recursion construction as the PageRank and label-propagation
-    oracles, and integer-exact (no floats anywhere)."""
+    oracles, and integer-exact (no floats anywhere). Each level reads the
+    one before it three times, so the levels and ``g`` are MATERIALIZED:
+    inlined, DuckDB re-expands d0 3^N times (sf0.001: 325 s -> 0.1 s)."""
     sql = f"""
     WITH {_SQL_COPURCHASE_EDGES},
-    g AS (
+    g AS MATERIALIZED (
       SELECT p1 AS u, p2 AS v FROM e WHERE n_orders >= 2
       UNION ALL
       SELECT p2 AS u, p1 AS v FROM e WHERE n_orders >= 2
     ),
-    d0 AS (SELECT MIN(u) AS v, 0 AS hops FROM g)"""
+    d0 AS MATERIALIZED (SELECT MIN(u) AS v, 0 AS hops FROM g)"""
     for t in range(1, max_hops + 1):
         sql += f""",
-    d{t} AS (
+    d{t} AS MATERIALIZED (
       SELECT v, hops FROM d{t - 1}
       UNION ALL
       SELECT DISTINCT g.v, {t} AS hops
