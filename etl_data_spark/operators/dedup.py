@@ -505,65 +505,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _star_rounds(edges: DataFrame, max_iter: int):
-    """Alternating large-star/small-star rounds over canonical (hi, lo)
-    edges: yields ``(edges, n_edges, rounds, converged)`` for the cut
-    input (round 0) and after every round, and raises once ``max_iter``
-    rounds pass without convergence. The one round loop behind
-    :func:`star_contraction` (which runs it to convergence) and
-    :func:`connected_components` (which may stop it early and finish with
-    one union-find task).
-
-    Convergence is detected by an edge-set checksum (count + xor of
-    xxhash64 — overflow-proof under ANSI mode; the edge set is distinct,
-    so set equality is what's being tested). Each round PERSISTS its edge
-    set and computes the checksum in the same action (the agg
-    materializes the cache) — one driver round-trip per round. Lineage is
-    truncated every 4th round so the logical plan stays bounded for the
-    long contractions ``max_iter`` allows; a superseded round's cache is
-    released when the next round is checksummed (the frame last yielded
-    keeps its cache and is released by the consumer's ``release_all``,
-    the operator self-containment contract).
-    """
-    edges = truncate_lineage(edges)
-
-    def _sig(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("hi", "lo")), F.lit(0)).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    sig = _sig(edges)
-    yield edges, sig[0], 0, False
-    prev_cached: DataFrame | None = None
-    for r in range(max_iter):
-        nxt = _small_star(_large_star(edges))
-        if (r + 1) % 4 == 0:
-            nxt = truncate_lineage(nxt)
-        else:
-            nxt = pin(nxt, StorageLevel.MEMORY_AND_DISK)
-        new_sig = _sig(nxt)  # one action: fills the cache AND checksums
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = nxt if (r + 1) % 4 != 0 else None
-        edges = nxt
-        yield edges, new_sig[0], r + 1, new_sig == sig
-        if new_sig == sig:
-            return
-        sig = new_sig
-    # Unconverged star edges would silently mislabel clusters (a hi still
-    # pointing at a non-root lo) — for dedup that means keeping duplicates
-    # or dropping survivors. Fail loudly instead; the O(log^2 n) bound
-    # means hitting this indicates max_iter far too small for the graph,
-    # not a marginal miss.
-    raise RuntimeError(
-        f"star_contraction did not converge within max_iter={max_iter} "
-        "rounds; raise max_iter (rounds needed grow ~2*log2(n), so even "
-        "planet-scale graphs fit comfortably in the default 50)"
-    )
-
-
 def star_contraction(
     edges: DataFrame, max_iter: int = 50
 ) -> tuple[DataFrame, int]:
@@ -577,19 +518,71 @@ def star_contraction(
 
     Input: canonical (hi, lo) pairs, hi > lo. Output: (star_edges, rounds)
     where star_edges maps every non-root node (hi) to its component
-    minimum (lo). Rounds, checksums and caching are :func:`_star_rounds`,
-    run here until the edge set stops changing.
+    minimum (lo). Convergence is detected by an edge-set checksum (count +
+    xor of xxhash64 — overflow-proof under ANSI mode; the edge set is
+    distinct, so set equality is what's being tested).
+
+    r13 (guide §1.2 — fewer actions): each round PERSISTS its edge set
+    and computes the convergence checksum in the same action (the agg
+    materializes the cache), instead of an eager localCheckpoint action
+    followed by a separate checksum action — one driver round-trip per
+    round, not two. Lineage is still truncated every 4th round (and for
+    the returned frame) so the logical plan stays bounded for the long
+    contractions ``max_iter`` allows; superseded round caches are
+    released eagerly (the frame handed back to the caller keeps its
+    cache and is released by the consumer's ``release_all``, the
+    operator self-containment contract).
     """
-    for stars, _, rounds, converged in _star_rounds(edges, max_iter):
-        if converged:
+    edges = truncate_lineage(edges)
+
+    def _sig(e: DataFrame) -> tuple[int, int]:
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("hi", "lo")), F.lit(0)).alias("h"),
+        ).first()
+        return row["n"], row["h"]
+
+    sig = _sig(edges)
+    rounds = 0
+    converged = False
+    prev_cached: DataFrame | None = None
+    for r in range(max_iter):
+        rounds += 1
+        nxt = _small_star(_large_star(edges))
+        if (r + 1) % 4 == 0:
+            nxt = truncate_lineage(nxt)
+        else:
+            nxt = pin(nxt, StorageLevel.MEMORY_AND_DISK)
+        new_sig = _sig(nxt)  # one action: fills the cache AND checksums
+        if prev_cached is not None:
+            prev_cached.unpersist()
+        prev_cached = nxt if (r + 1) % 4 != 0 else None
+        edges = nxt
+        if new_sig == sig:
+            converged = True
             break
-    return stars, rounds
+        sig = new_sig
+    if not converged:
+        # Unconverged star edges would silently mislabel clusters (a hi
+        # still pointing at a non-root lo) — for dedup that means keeping
+        # duplicates or dropping survivors. Fail loudly instead; the
+        # O(log^2 n) bound means hitting this indicates max_iter far too
+        # small for the graph, not a marginal miss.
+        raise RuntimeError(
+            f"star_contraction did not converge within max_iter={max_iter} "
+            "rounds; raise max_iter (rounds needed grow ~2*log2(n), so even "
+            "planet-scale graphs fit comfortably in the default 50)"
+        )
+    return edges, rounds
 
 
 # Edge rows at or below which one task labels the graph with union-find:
 # 2^20 pairs of int64 ids are ~16 MB of Arrow input, so the finish stays
 # well inside one Python worker while a graph this small would otherwise
 # pay ~2 Spark jobs per contraction round at the engine's latency floor.
+# The cap counts rows, not bytes: that bound holds for fixed-width ids,
+# while string ids cost their length per row (and one Python object per
+# distinct id in the task's np.unique).
 _FINISH_MAX_EDGES = 1 << 20
 
 
@@ -676,19 +669,19 @@ def connected_components(
     :data:`_FINISH_MAX_EDGES` rows (``limit(cap + 1).count()``, which
     stops reading at the cap), one union-find task labels every node
     (:func:`_union_find_labels`). Below the cap a contraction round costs
-    more in per-job latency than its data, and one task's memory is
-    bounded by the cap.
+    more in per-job latency than its data. The cap bounds the task's rows;
+    its bytes are bounded for fixed-width ids, while string ids cost their
+    length per row.
 
-    **Large graphs: contract, then finish.** Above the cap the graph is
-    contracted by alternating large-star/small-star rounds (Kiveris et al.
-    2014; :func:`_star_rounds`) — O(log^2 n) rounds independent of
+    **Large graphs: contract.** Above the cap the graph is contracted by
+    alternating large-star/small-star rounds (Kiveris et al. 2014;
+    :func:`star_contraction`) — O(log^2 n) rounds independent of
     component diameter, each shuffling the edge set keyed by node id, no
     step materializing a neighborhood larger than the node's degree, and
     the edge set shrinking toward one edge per non-root node — 100 TB-safe.
-    Contraction keeps every node and its component, so as soon as a
-    round's checksum count (already computed, no extra action) is at or
-    below the cap, the union-find task finishes from that round's edges;
-    a node in no edge (a self-pair only, or null) labels itself.
+    The node set is joined to the converged stars; a node in no star edge
+    (a self-pair only, or null) labels itself. ``max_iter`` bounds these
+    contraction rounds, so it applies only to graphs above the cap.
 
     This is the step that turns pairwise similarity output into dedup
     groups (keep min-id per cluster, drop the rest).
@@ -711,19 +704,8 @@ def connected_components(
         .filter(F.col("hi") != F.col("lo"))
         .distinct()
     )
-    for stars, n_edges, _, converged in _star_rounds(canonical, max_iter):
-        if n_edges <= _FINISH_MAX_EDGES:
-            roots = _union_find_labels(
-                stars.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-            ).select(
-                F.col("doc_id").alias("node"), F.col("cluster_id").alias("root")
-            )
-            break
-        if converged:
-            roots = stars.select(
-                F.col("hi").alias("node"), F.col("lo").alias("root")
-            )
-            break
+    stars, _ = star_contraction(canonical, max_iter=max_iter)
+    roots = stars.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
     nodes = cut.select(F.col("a").alias("node")).union(
         cut.select(F.col("b").alias("node"))
     ).distinct()
@@ -1241,6 +1223,8 @@ def connected_components_incremental(
     historical pairs ∪ batch pairs), because star edges are
     connectivity- and min-preserving (the old root IS the old min, and
     it rides the star edges into any newly merged component).
+    ``max_iter`` is passed to :func:`connected_components`, so it bounds
+    contraction only when those edges exceed :data:`_FINISH_MAX_EDGES`.
     """
     star_edges = labels.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("id_b")

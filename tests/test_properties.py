@@ -308,45 +308,6 @@ def test_star_contraction_matches_union_find(spark, monkeypatch, cap, edges):
     assert got == _union_find_truth(edges)
 
 
-def test_contraction_hands_over_to_union_find_mid_way(spark, monkeypatch):
-    """A cap between the input's edge count and the converged one stops
-    contraction after a few rounds and finishes with union-find: the
-    4096-node chain + cliques + blob graph of
-    test_star_contraction_skewed_components (4483 canonical edges, 4315
-    after round 2, 4303 once converged at round 13) must still get exact
-    labels."""
-    import random
-
-    from etl_data_spark.operators import dedup
-
-    edges = [(i, i + 1) for i in range(4095)]
-    for base, k in ((10_000, 12), (20_000, 8)):
-        edges += [(base + i, base + j) for i in range(k) for j in range(i + 1, k)]
-    rng = random.Random(7)
-    blob = [30_000 + i for i in range(200)]
-    edges += [tuple(rng.sample(blob, 2)) for _ in range(300)]
-
-    seen = []
-    rounds = dedup._star_rounds
-
-    def spy(edges, max_iter):
-        for step in rounds(edges, max_iter):
-            seen.append(step[1:])
-            yield step
-
-    monkeypatch.setattr(dedup, "_FINISH_MAX_EDGES", 4350)
-    monkeypatch.setattr(dedup, "_star_rounds", spy)
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(8)
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(pairs).collect()
-    }
-    assert got == _union_find_truth(edges)
-    # handed over after a contraction round, before convergence
-    n_edges, last_round, converged = seen[-1]
-    assert n_edges <= 4350 and last_round >= 1 and not converged, seen
-
-
 # rows the contraction-only implementation returned for these inputs: a
 # null end links nothing but keeps its non-null end as a node, and any
 # null id yields one (None, None) row; string ids take the minimum in
