@@ -202,9 +202,9 @@ def _write_version_dir(
     """Write the month-partitioned batch under the next ``data/vNNNNNN``
     directory; return (relative dir, month keys actually written).
 
-    r14 (VERDICT r13 #6): month-cluster the batch like the rename-path
-    writers so a version dir holds O(files_per_month) files per month,
-    not tasks x months."""
+    The batch is month-clustered like the rename-path writers
+    (:func:`cluster_by_month`), so a version dir holds a few files per
+    month, not tasks x months."""
     existing = _numbered(spark, f"{root}/{_DATA_DIR}", "v")
     rel = f"{_DATA_DIR}/v{(existing[-1] if existing else 0) + 1:06d}"
     cluster_by_month(keyed, date_col).write.mode("overwrite").partitionBy(

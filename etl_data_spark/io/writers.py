@@ -14,6 +14,13 @@ partitioning is also the substitute for the reference's B-tree date indexes
 (01_init_all.sql:59-60) — at 100 TB, partition pruning + parquet min/max
 row-group stats serve the same access-path role.
 
+Every month-partitioned write goes through :func:`cluster_by_month`. It
+hash-shuffles an unaligned frame so each month lands in a few files, and
+leaves alone a frame that is already month-aligned: a map-only plan over
+scans of month-partitioned tables, like the fact built from read-back
+silver and the mart window of the read-back fact. Such a write runs no
+shuffle and never emits more files than its input has file splits.
+
 All directory manipulation goes through the Hadoop FileSystem API helpers
 below (also the only FS access of io/layout.py, io/manifest.py and the
 streaming sinks), so tables may live on HDFS/S3/local alike.
@@ -253,27 +260,64 @@ def with_month_key(df: DataFrame, date_col: str = "effective_from") -> DataFrame
     )
 
 
-def cluster_by_month(
-    keyed: DataFrame,
-    date_col: str = "effective_from",
-    files_per_month: int | None = None,
-) -> DataFrame:
+def _month_aligned(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan keeps every row in the scan split it
+    was read from, and every split comes from a table partitioned by
+    ``MONTH_KEY``: no shuffle exchange outside broadcast build sides, no
+    node that zips the partitions of two inputs (a join of bucketed scans,
+    a cartesian product), and only such scans as leaves. Planning only —
+    no job runs. Under adaptive execution the walk reads the initial plan,
+    which already holds the exchanges."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
+            return False
+        seq = node.children()
+        kids = [
+            k
+            for k in (seq.apply(i) for i in range(seq.size()))
+            if k.getClass().getSimpleName() != "BroadcastExchangeExec"
+        ]
+        if not kids:
+            if name != "FileSourceScanExec" or MONTH_KEY not in list(
+                node.relation().partitionSchema().fieldNames()
+            ):
+                return False
+        elif len(kids) > 1 and name != "UnionExec":
+            return False
+        stack.extend(kids)
+    return True
+
+
+def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> DataFrame:
     """Cluster a MONTH_KEY-keyed frame for a month-partitioned write.
 
-    r13 (guide §6 — file sizing on write): without clustering, every
-    write task holding rows of every month emits tasks x months files
-    (measured: 637 silver files at sf0.1 where ~12 carry the data).
-    ``files_per_month`` bounds files per month via a deterministic
-    date-derived salt (xxhash64 of the date column — deterministic under
-    retries, unlike rand(); guide §2.5): default is
-    max(1, defaultParallelism / 12), so the local bench writes ~1 file
-    per month while a large cluster keeps per-month write parallelism.
-    Row content is unchanged; only the row->file layout moves. r14
-    (VERDICT r13 #6): factored out so the windowed-reload and manifest
-    writers get the same treatment as the full write."""
+    Without clustering, every write task holding rows of every month emits
+    tasks x months files (measured: 637 silver files at sf0.1 where ~12
+    carry the data). An unaligned frame (see :func:`_month_aligned`) is
+    hash-repartitioned on the month and a deterministic date-derived salt
+    (xxhash64 of the date column — deterministic under retries, unlike
+    rand()) with max(1, defaultParallelism / 12) values, so the local
+    bench writes ~1 file per month while a large cluster keeps per-month
+    write parallelism.
+
+    An aligned frame — a map-only plan over scans of month-partitioned
+    tables, such as the fact built from read-back silver or the mart
+    window of the read-back fact — is returned unchanged and its write is
+    map-only: the planned write adds only a task-local sort. Every file
+    split lies in one month directory, so each task writes one file per
+    month it read and the output never has more files than the input has
+    file splits. Either way row content is unchanged; only the row->file
+    layout moves."""
+    if _month_aligned(keyed):
+        return keyed
     spread = keyed.sparkSession.sparkContext.defaultParallelism
-    fpm = files_per_month or max(1, spread // 12)
-    salt = F.pmod(F.xxhash64(F.col(date_col)), F.lit(fpm))
+    salt = F.pmod(F.xxhash64(F.col(date_col)), F.lit(max(1, spread // 12)))
     return keyed.repartition(F.col(MONTH_KEY), salt)
 
 
@@ -303,22 +347,17 @@ def write_partitioned(
     path: str,
     date_col: str = "effective_from",
     mode: str = "overwrite",
-    files_per_month: int | None = None,
 ) -> None:
     """Write a table partitioned by month-of(date_col) for pruning.
 
     See :func:`cluster_by_month` for the row->file layout contract."""
     keyed = with_month_key(df, date_col)
     (
-        cluster_by_month(keyed, date_col, files_per_month)
+        cluster_by_month(keyed, date_col)
         .write.mode(mode)
         .partitionBy(MONTH_KEY)
         .parquet(path)
     )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop(MONTH_KEY)
 
 
 def compact_small_files(

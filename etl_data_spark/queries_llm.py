@@ -33,6 +33,9 @@ _SQL_SHINGLES = """
                     string_split(text, ' ')[i+2])))
 """
 
+# All-pairs Jaccard over distinct shingle lists. J <= min/max of the two
+# list sizes, and ROUND(J, 6) >= t implies J >= t - 5e-7, so the size
+# filter (1e-6 slack) drops only pairs that can never reach the threshold.
 _SQL_PAIR_JACCARD = """
 WITH sh AS (
   SELECT doc_id, {shingles} AS shingles FROM documents
@@ -43,6 +46,8 @@ pairs AS (
                / len(list_distinct(list_concat(a.shingles, b.shingles))), 6) AS jaccard
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   WHERE len(a.shingles) > 0 AND len(b.shingles) > 0
+    AND least(len(a.shingles), len(b.shingles))
+        >= ({threshold} - 1e-6) * greatest(len(a.shingles), len(b.shingles))
 )
 SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= {threshold}
 """
