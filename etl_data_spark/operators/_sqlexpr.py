@@ -36,13 +36,3 @@ def sq_l2_lit(a_sql: str, vals) -> str:
         "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         "0.0D, (acc, v) -> acc + v)"
     )
-
-
-def dot_lit(a_sql: str, vals) -> str:
-    """Dot product against a literal vector — the exact ``dot`` tree
-    (zip_with + ordered left fold), rendered as text."""
-    return (
-        f"aggregate(zip_with({a_sql}, {dbl_array(vals)}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )

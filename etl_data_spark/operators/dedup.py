@@ -1061,7 +1061,7 @@ def minhash_lsh_pairs_incremental(
 # the band table (the planner broadcasts a small banded delta, so the
 # stored side streams map-only — no shuffle of the index), then exact
 # Jaccard on candidates only. Cost tracks |delta| x bucket-mates, not
-# |corpus| (measured: tools_dedup_slope.py).
+# |corpus| (measured: `tools_slope.py dedup`).
 
 
 def write_minhash_bands(

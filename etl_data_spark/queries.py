@@ -605,13 +605,3 @@ def q_latest_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("o_custkey", "o_orderkey", "o_orderdate")
     )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.fn for name, spec in REGISTRY.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
-    }

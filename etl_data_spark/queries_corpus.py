@@ -1450,10 +1450,6 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_xlogx(e: str) -> str:
-    return f"CASE WHEN {e} > 0 THEN {e} * LN(CAST({e} AS DOUBLE)) ELSE 0.0e0 END"
-
-
 @register(
     "keyness_terms",
     f"""

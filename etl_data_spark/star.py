@@ -14,12 +14,8 @@ holds an unrelated MySQL procedure) with Spark-native idioms:
 - The 4-way fact lookup join broadcasts every dimension: at 100 TB the fact
   side streams through executors map-side only — zero shuffle.
 - ``fact_id`` (BIGSERIAL) needs uniqueness only (the DQ uniqueness check
-  groups by it): the DEFAULT is scale mode — ``monotonically_increasing_id``,
-  shuffle-free and collision-free per load. ``dense_fact_ids=True`` is the
-  opt-in test/oracle mode: deterministic dense ids via ``row_number`` over a
-  global ordering, which plans as a single-partition sort and is therefore
-  capped at ~1e8 rows per load window — never the default for a 100 TB
-  engine.
+  groups by it), so it is ``monotonically_increasing_id``: shuffle-free and
+  collision-free per load.
 """
 
 from __future__ import annotations
@@ -91,7 +87,6 @@ def build_fact(
     start_date: dt.date | str | None = None,
     end_date: dt.date | str | None = None,
     fact_id_offset: int = 0,
-    dense_fact_ids: bool = False,
 ) -> DataFrame:
     """Four broadcast LEFT JOINs resolving surrogate keys, then fact append.
 
@@ -108,19 +103,12 @@ def build_fact(
             F.broadcast(dim), joined[source_col] == dim[key_col], "left"
         ).drop(key_col)
 
-    if dense_fact_ids:
-        # Opt-in oracle/test mode: deterministic dense ids via a GLOBAL
-        # single-partition sort — fine up to ~1e8 rows per load window,
-        # never for the scale path. Order by the stable source row id.
-        w = Window.orderBy("id", "effective_from", "user_id")
-        fact_id = (F.row_number().over(w) + F.lit(fact_id_offset)).cast("long")
-    else:
-        # Scale mode (default): unique, shuffle-free, not dense. The +1
-        # matters: monotonically_increasing_id starts at 0, and offset is
-        # the MAX existing fact_id — without it the first new id collides.
-        fact_id = (
-            F.monotonically_increasing_id() + F.lit(fact_id_offset) + F.lit(1)
-        ).cast("long")
+    # Unique, shuffle-free, not dense. The +1 matters:
+    # monotonically_increasing_id starts at 0, and offset is the MAX
+    # existing fact_id — without it the first new id collides.
+    fact_id = (
+        F.monotonically_increasing_id() + F.lit(fact_id_offset) + F.lit(1)
+    ).cast("long")
 
     return joined.select(
         fact_id.alias("fact_id"),
@@ -144,7 +132,6 @@ def build_star(
     existing: StarSchema | None = None,
     start_date: dt.date | str | None = None,
     end_date: dt.date | str | None = None,
-    dense_fact_ids: bool = False,
 ) -> StarSchema:
     """Run the full DM load for one window: 4 dim upserts + fact build.
 
@@ -165,8 +152,7 @@ def build_star(
     if existing.fact is not None:
         offset = existing.fact.agg(F.max("fact_id")).first()[0] or 0
     fact_new = build_fact(
-        silver, dims, start_date, end_date, fact_id_offset=offset,
-        dense_fact_ids=dense_fact_ids,
+        silver, dims, start_date, end_date, fact_id_offset=offset
     )
     fact = (
         existing.fact.unionByName(fact_new) if existing.fact is not None else fact_new

@@ -49,8 +49,6 @@ ALLOWED = {
     # dense surrogate keys over a dim's distinct natural keys (bounded
     # domains, ~1e2 keys)
     ("star.py", "upsert_dim"): 1,
-    # the opt-in dense_fact_ids oracle mode only, never the scale path
-    ("star.py", "build_fact"): 1,
 }
 
 

@@ -114,10 +114,10 @@ def test_star_schema(spark, silver):
 
 
 def test_fact_scale_mode_has_no_global_sort(spark, silver):
-    """Default fact-id assignment must be shuffle-free: no single-partition
-    global Window sort in the fact build's physical plan (that is the opt-in
-    dense mode for oracle runs only). Dims are materialized first so their
-    own tiny row_number windows don't appear in the inspected plan."""
+    """Fact-id assignment must be shuffle-free: no single-partition global
+    Window sort in the fact build's physical plan. Dims are materialized
+    first so their own tiny row_number windows don't appear in the
+    inspected plan."""
     from etl_data_spark.star import DIM_SPECS, build_fact, upsert_dim
 
     dims = {}
@@ -129,10 +129,6 @@ def test_fact_scale_mode_has_no_global_sort(spark, silver):
     p = fact._jdf.queryExecution().executedPlan().toString()
     assert "monotonically_increasing_id" in p
     assert "Window" not in p and "SinglePartition" not in p
-
-    dense = build_fact(silver, dims, dense_fact_ids=True)
-    pd_ = dense._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in pd_  # dense mode really is the window path
 
 
 def test_fact_ids_unique_across_incremental_loads(spark, silver):

@@ -8,24 +8,7 @@ plan lived only in prose).
 import json
 import os
 
-from etl_data_spark.catalog import (
-    CHANGED_R9,
-    CHANGED_R10,
-    CHANGED_R11,
-    CHANGED_R12,
-    CHANGED_R13,
-    CHANGED_THIS_ROUND,
-    PRIORITY,
-    PRIORITY_R7,
-    PRIORITY_R8,
-    PRIORITY_R9,
-    PRIORITY_R10,
-    PRIORITY_R11,
-    PRIORITY_R12,
-    PRIORITY_R13,
-    PRIORITY_R14,
-    REGISTRY,
-)
+from etl_data_spark.catalog import CHANGED_THIS_ROUND, PRIORITY, REGISTRY
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,76 +34,13 @@ def _driver_green() -> set[str]:
 
 def test_window_is_exactly_50_known_entries():
     assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
-    assert len(PRIORITY_R7) == 50 and len(set(PRIORITY_R7)) == 50
-    assert len(PRIORITY_R8) == 50 and len(set(PRIORITY_R8)) == 50
-    assert len(PRIORITY_R9) == 50 and len(set(PRIORITY_R9)) == 50
-    assert len(PRIORITY_R10) == 50 and len(set(PRIORITY_R10)) == 50
-    assert len(PRIORITY_R11) == 50 and len(set(PRIORITY_R11)) == 50
-    assert len(PRIORITY_R12) == 50 and len(set(PRIORITY_R12)) == 50
-    assert len(PRIORITY_R13) == 50 and len(set(PRIORITY_R13)) == 50
-    assert len(PRIORITY_R14) == 50 and len(set(PRIORITY_R14)) == 50
-    unknown = [
-        n
-        for n in PRIORITY
-        + PRIORITY_R7
-        + PRIORITY_R8
-        + PRIORITY_R9
-        + PRIORITY_R10
-        + PRIORITY_R11
-        + PRIORITY_R12
-        + PRIORITY_R13
-        + PRIORITY_R14
-        if n not in REGISTRY
-    ]
+    unknown = [n for n in PRIORITY if n not in REGISTRY]
     assert not unknown, f"window references unregistered queries: {unknown}"
-    # consecutive windows must not overlap EXCEPT for changed-path
-    # re-entries — a slot spent on an entry the previous window just
-    # re-verified is wasted UNLESS its code path changed again this round
-    # (ROTATION.md: a changed entry must re-earn its row the same round).
-    # Historical pairs are audited against the frozen changed-list of the
-    # round that justified the overlap; the latest pair against the
-    # current round's list.
-    overlap_89 = set(PRIORITY_R8) & set(PRIORITY_R9)
-    assert overlap_89 <= set(CHANGED_R9), (
-        f"unchanged entries repeated across the r8/r9 windows: "
-        f"{sorted(overlap_89 - set(CHANGED_R9))}"
-    )
-    overlap_910 = set(PRIORITY_R9) & set(PRIORITY_R10)
-    assert overlap_910 <= set(CHANGED_R10), (
-        f"unchanged entries repeated across the r9/r10 windows: "
-        f"{sorted(overlap_910 - set(CHANGED_R10))}"
-    )
-    overlap_1011 = set(PRIORITY_R10) & set(PRIORITY_R11)
-    assert overlap_1011 <= set(CHANGED_R11), (
-        f"unchanged entries repeated across the r10/r11 windows: "
-        f"{sorted(overlap_1011 - set(CHANGED_R11))}"
-    )
-    overlap_1112 = set(PRIORITY_R11) & set(PRIORITY_R12)
-    assert overlap_1112 <= set(CHANGED_R12), (
-        f"unchanged entries repeated across the r11/r12 windows: "
-        f"{sorted(overlap_1112 - set(CHANGED_R12))}"
-    )
-    overlap_1213 = set(PRIORITY_R12) & set(PRIORITY_R13)
-    assert overlap_1213 <= set(CHANGED_R13), (
-        f"unchanged entries repeated across the r12/r13 windows: "
-        f"{sorted(overlap_1213 - set(CHANGED_R13))}"
-    )
-    overlap_1314 = set(PRIORITY_R13) & set(PRIORITY_R14)
-    assert overlap_1314 <= set(CHANGED_THIS_ROUND), (
-        f"unchanged entries repeat across consecutive windows: "
-        f"{sorted(overlap_1314 - set(CHANGED_THIS_ROUND))}"
-    )
 
 
 def test_active_window_is_the_regression_rotation():
-    """Round 8 on: the burn-down is complete, so the active window must be
-    the regression rotation, opening with the current round's changed code
-    paths (ROTATION.md)."""
-    assert PRIORITY is PRIORITY_R14
-    # r14 changed paths lead the window: the optimization round's
-    # plan-moved entries (SemDeDup Arrow scoring, skew-hardened star
-    # rounds, Arrow minhash banding, packed simhash, threshold-curve /
-    # Weiszfeld / OPQ action cuts, setsim pairwise prefix bound)
+    """The active window is the regression rotation: it opens with the
+    current round's changed code paths (ROTATION.md)."""
     assert PRIORITY[: len(CHANGED_THIS_ROUND)] == CHANGED_THIS_ROUND
 
 
