@@ -17,8 +17,10 @@ shared action (the silver sum cross-joined with one aggregate over the
 fact), run by the first check that reads it; DQ4 keeps its own ``groupBy``.
 Isolation still holds per check: when the shared action raises, every check
 that reads it gets its own ``error`` row carrying that error, and the
-action is not run again. The results frame is built from literals, so the
-runner starts no Python worker.
+action is not run again. Small read-back silver and fact
+(``io.writers.one_task_if_small``) are aggregated in one task, so neither
+action shuffles. The results frame is built from literals, so the runner
+starts no Python worker.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_data_spark.cleanse import date_window_filter
+from etl_data_spark.io.writers import one_task_if_small
 from etl_data_spark.schemas import DQ_RESULT_SCHEMA
 
 PASSED, FAILED, ERROR = "passed", "failed", "error"
@@ -201,8 +204,9 @@ def reference_checks(
     end_date: dt.date | str | None = None,
 ) -> list[CheckSpec]:
     """DQ1-DQ5 from fn_dq_checks_load.sql:19-188, windowed like the source."""
-    s = date_window_filter(silver, start_date, end_date)
-    f_ = date_window_filter(fact, start_date, end_date)
+    # small read-back tables aggregate in one task, with no exchange
+    s = one_task_if_small(date_window_filter(silver, start_date, end_date))
+    f_ = one_task_if_small(date_window_filter(fact, start_date, end_date))
 
     def scan() -> Row:
         # every aggregate of DQ1-DQ3 and DQ5 in one action: silver's sum

@@ -14,12 +14,18 @@ partitioning is also the substitute for the reference's B-tree date indexes
 (01_init_all.sql:59-60) — at 100 TB, partition pruning + parquet min/max
 row-group stats serve the same access-path role.
 
-Every month-partitioned write goes through :func:`cluster_by_month`. It
-hash-shuffles an unaligned frame so each month lands in a few files, and
-leaves alone a frame that is already month-aligned: a map-only plan over
+Every month-partitioned write goes through :func:`cluster_by_month`, with
+one of three outcomes. A frame already month-aligned (a map-only plan over
 scans of month-partitioned tables, like the fact built from read-back
-silver and the mart window of the read-back fact. Such a write runs no
-shuffle and never emits more files than its input has file splits.
+silver and the mart window of the read-back fact) is written as it is: no
+shuffle, never more files than its input has file splits. A small frame (a
+map-only plan over file scans that cannot multiply rows, holding at most
+``spark.sql.adaptive.coalescePartitions.minPartitionSize``, like the silver
+cleansed from a nightly batch's read-back bronze) is written from one task,
+one file per month. Any other frame is hash-shuffled so each month lands in
+a few files. :func:`one_task_if_small` puts a small input in one task for
+other consumers too: the dim upserts (star.py) and the DQ aggregates
+(dq.py) over read-back silver and fact then plan no exchange.
 
 All directory manipulation goes through the Hadoop FileSystem API helpers
 below (also the only FS access of io/layout.py, io/manifest.py and the
@@ -260,23 +266,43 @@ def with_month_key(df: DataFrame, date_col: str = "effective_from") -> DataFrame
     )
 
 
-def _month_aligned(df: DataFrame) -> bool:
-    """Whether ``df``'s physical plan keeps every row in the scan split it
-    was read from, and every split comes from a table partitioned by
-    ``MONTH_KEY``: no shuffle exchange outside broadcast build sides, no
-    node that zips the partitions of two inputs (a join of bucketed scans,
-    a cartesian product), and only such scans as leaves. Planning only —
-    no job runs. Under adaptive execution the walk reads the initial plan,
-    which already holds the exchanges."""
+# Nodes that never emit more rows than they read, or zip two inputs: what
+# a one-task plan may hold (see :func:`_small_map_only`).
+_ROW_BOUNDED = frozenset(
+    {
+        "FileSourceScanExec",
+        "FilterExec",
+        "ProjectExec",
+        "UnionExec",
+        "CollectMetricsExec",
+        "WholeStageCodegenExec",
+        "InputAdapter",
+        "ColumnarToRowExec",
+    }
+)
+
+
+def _map_only_scans(df: DataFrame, row_bounded: bool = False) -> list | None:
+    """The file scans ``df``'s physical plan reads when the plan keeps
+    every row in the scan split it was read from, else None: no shuffle
+    exchange outside broadcast build sides, no node that zips the
+    partitions of two inputs (a join of bucketed scans, a cartesian
+    product), and only ``FileSourceScanExec`` leaves. With
+    ``row_bounded`` every node must also be in ``_ROW_BOUNDED``, so no
+    join, generator, Python map or cached scan passes. Planning only —
+    no job runs. Under adaptive execution the walk reads the initial
+    plan, which already holds the exchanges."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.initialPlan()
-    stack = [plan]
+    scans, stack = [], [plan]
     while stack:
         node = stack.pop()
         name = node.getClass().getSimpleName()
-        if name == "ShuffleExchangeExec":
-            return False
+        if name == "ShuffleExchangeExec" or (
+            row_bounded and name not in _ROW_BOUNDED
+        ):
+            return None
         seq = node.children()
         kids = [
             k
@@ -284,14 +310,51 @@ def _month_aligned(df: DataFrame) -> bool:
             if k.getClass().getSimpleName() != "BroadcastExchangeExec"
         ]
         if not kids:
-            if name != "FileSourceScanExec" or MONTH_KEY not in list(
-                node.relation().partitionSchema().fieldNames()
-            ):
-                return False
+            if name != "FileSourceScanExec":
+                return None
+            scans.append(node)
         elif len(kids) > 1 and name != "UnionExec":
-            return False
+            return None
         stack.extend(kids)
-    return True
+    return scans
+
+
+def _month_aligned(df: DataFrame) -> bool:
+    """Whether ``df`` is map-only over scans of tables partitioned by
+    ``MONTH_KEY`` (see :func:`_map_only_scans`), so every split it reads
+    lies in one month directory."""
+    scans = _map_only_scans(df)
+    return scans is not None and all(
+        MONTH_KEY in list(s.relation().partitionSchema().fieldNames())
+        for s in scans
+    )
+
+
+def _small_map_only(df: DataFrame) -> bool:
+    """Whether ``df``'s plan is map-only over file scans that cannot
+    multiply rows (see :func:`_map_only_scans`) and those scans hold at
+    most ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` bytes:
+    the on-disk bytes of each scanned relation (every file of it, before
+    partition pruning), read from the plan — no job runs."""
+    scans = _map_only_scans(df, row_bounded=True)
+    if scans is None:
+        return False
+    spark = df.sparkSession
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    return sum(s.relation().sizeInBytes() for s in scans) <= floor
+
+
+def one_task_if_small(df: DataFrame) -> DataFrame:
+    """``df`` in one partition (``coalesce(1)``, no shuffle) when it is a
+    small map-only read (see :func:`_small_map_only`), else unchanged.
+
+    Adaptive execution never cuts a reduce side below that size, so a
+    shuffle of such an input would end in one task anyway: it buys no
+    parallelism and only moves bytes. Over one partition an aggregate, a
+    window or a month-partitioned write plans no exchange."""
+    return df.coalesce(1) if _small_map_only(df) else df
 
 
 def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> DataFrame:
@@ -299,23 +362,31 @@ def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> Data
 
     Without clustering, every write task holding rows of every month emits
     tasks x months files (measured: 637 silver files at sf0.1 where ~12
-    carry the data). An unaligned frame (see :func:`_month_aligned`) is
-    hash-repartitioned on the month and a deterministic date-derived salt
-    (xxhash64 of the date column — deterministic under retries, unlike
-    rand()) with max(1, defaultParallelism / 12) values, so the local
-    bench writes ~1 file per month while a large cluster keeps per-month
-    write parallelism.
+    carry the data). Three outcomes, first match wins:
 
-    An aligned frame — a map-only plan over scans of month-partitioned
-    tables, such as the fact built from read-back silver or the mart
-    window of the read-back fact — is returned unchanged and its write is
-    map-only: the planned write adds only a task-local sort. Every file
-    split lies in one month directory, so each task writes one file per
-    month it read and the output never has more files than the input has
-    file splits. Either way row content is unchanged; only the row->file
-    layout moves."""
+    - An aligned frame (see :func:`_month_aligned`) — a map-only plan over
+      scans of month-partitioned tables, such as the fact built from
+      read-back silver or the mart window of the read-back fact — is
+      returned unchanged. Every file split lies in one month directory, so
+      each task writes one file per month it read and the output never has
+      more files than the input has file splits.
+    - A small frame (see :func:`_small_map_only`) — such as the silver
+      cleansed from a nightly batch's read-back bronze — is coalesced into
+      one task, which writes one file per month.
+    - Any other frame is hash-repartitioned on the month and a
+      deterministic date-derived salt (xxhash64 of the date column —
+      deterministic under retries, unlike rand()) with
+      max(1, defaultParallelism / 12) values, so the local bench writes
+      ~1 file per month while a large cluster keeps per-month write
+      parallelism.
+
+    The first two writes are map-only: the planned write adds only a
+    task-local sort. Either way row content is unchanged; only the
+    row->file layout moves."""
     if _month_aligned(keyed):
         return keyed
+    if _small_map_only(keyed):
+        return keyed.coalesce(1)
     spread = keyed.sparkSession.sparkContext.defaultParallelism
     salt = F.pmod(F.xxhash64(F.col(date_col)), F.lit(max(1, spread // 12)))
     return keyed.repartition(F.col(MONTH_KEY), salt)

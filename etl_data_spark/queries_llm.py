@@ -33,21 +33,28 @@ _SQL_SHINGLES = """
                     string_split(text, ' ')[i+2])))
 """
 
-# All-pairs Jaccard over distinct shingle lists. J <= min/max of the two
-# list sizes, and ROUND(J, 6) >= t implies J >= t - 5e-7, so the size
-# filter (1e-6 slack) drops only pairs that can never reach the threshold.
+# Pairwise Jaccard over distinct shingle lists, scored only for pairs that
+# share a shingle: for any threshold > 0 a qualifying pair shares one. J <=
+# min/max of the two list sizes, and ROUND(J, 6) >= t implies J >= t - 5e-7,
+# so the size filter (1e-6 slack) drops only pairs that can never reach the
+# threshold.
 _SQL_PAIR_JACCARD = """
-WITH sh AS (
+WITH sh AS MATERIALIZED (
   SELECT doc_id, {shingles} AS shingles FROM documents
 ),
+tok AS MATERIALIZED (
+  SELECT doc_id, len(shingles) AS n, unnest(shingles) AS g FROM sh
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM tok a JOIN tok b ON a.g = b.g AND a.doc_id < b.doc_id
+  WHERE least(a.n, b.n) >= ({threshold} - 1e-6) * greatest(a.n, b.n)
+),
 pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+  SELECT c.id_a, c.id_b,
          ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
                / len(list_distinct(list_concat(a.shingles, b.shingles))), 6) AS jaccard
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(a.shingles) > 0 AND len(b.shingles) > 0
-    AND least(len(a.shingles), len(b.shingles))
-        >= ({threshold} - 1e-6) * greatest(len(a.shingles), len(b.shingles))
+  FROM cand c JOIN sh a ON a.doc_id = c.id_a JOIN sh b ON b.doc_id = c.id_b
 )
 SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= {threshold}
 """

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_data_spark.cleanse import date_window_filter
+from etl_data_spark.io.writers import one_task_if_small
 
 # (dim name, dim id column, dim natural-key column, silver source column)
 DIM_SPECS = [
@@ -57,11 +58,13 @@ def upsert_dim(
     would accept them, but the reference's cleansing guarantees non-NULL
     dim keys, and a NULL key row would never join back anyway.
     """
-    new_keys = (
-        silver.select(F.col(source_col).alias(key_col))
-        .filter(F.col(key_col).isNotNull())
-        .distinct()
-    )
+    # a small read-back silver runs the distinct and the numbering in
+    # one task, with no exchange
+    new_keys = one_task_if_small(
+        silver.select(F.col(source_col).alias(key_col)).filter(
+            F.col(key_col).isNotNull()
+        )
+    ).distinct()
     if existing is not None and existing.head(1):
         new_keys = new_keys.join(
             F.broadcast(existing.select(key_col)), on=key_col, how="left_anti"

@@ -10,6 +10,7 @@ from etl_data_spark.generate import generate_source
 from etl_data_spark.io.writers import (
     MONTH_KEY,
     cluster_by_month,
+    one_task_if_small,
     with_month_key,
     write_partitioned,
 )
@@ -81,41 +82,95 @@ def test_month_aligned_write_skips_the_exchange(spark, tmp_path):
     assert "REPARTITION_BY_COL" in _plan(fresh)
 
 
+def _month_files(path: str) -> dict[str, int]:
+    return {
+        d: len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")])
+        for d in os.listdir(path)
+        if d.startswith(f"{MONTH_KEY}=")
+    }
+
+
+def test_small_unaligned_write_runs_in_one_task(spark, tmp_path):
+    """A small map-only read of an unpartitioned table is written (and
+    aggregated) from one task: no exchange, one file per month, the same
+    rows as the hash-clustered write it replaces. Above the size floor
+    (forced here by a 1-byte floor) the write keeps the repartition."""
+    src = str(tmp_path / "flat")
+    generate_source(spark, rows=300, seed=7).write.parquet(src)
+    keyed = with_month_key(spark.read.parquet(src).filter(F.col("age") > 0))
+
+    one = cluster_by_month(keyed)
+    assert "Exchange" not in _plan(one)
+    assert "Exchange" not in _plan(one_task_if_small(keyed).groupBy("region").count())
+    one.write.partitionBy(MONTH_KEY).parquet(str(tmp_path / "one"))
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        hashed = cluster_by_month(keyed)
+        assert "REPARTITION_BY_COL" in _plan(hashed)
+        hashed.write.partitionBy(MONTH_KEY).parquet(str(tmp_path / "hash"))
+    finally:
+        spark.conf.set(key, prev)
+
+    files = _month_files(str(tmp_path / "one"))
+    assert len(files) > 1 and set(files.values()) == {1}, files
+    assert set(files) == set(_month_files(str(tmp_path / "hash")))
+    back = [spark.read.parquet(str(tmp_path / t)) for t in ("one", "hash")]
+    assert back[0].exceptAll(back[1]).count() == 0
+    assert back[1].exceptAll(back[0]).count() == 0
+
+
+def test_row_multiplying_plan_keeps_the_shuffle(spark, tmp_path):
+    """A small scan followed by a generator can emit any number of rows,
+    so it is not put in one task: a month write keeps the repartition."""
+    src = str(tmp_path / "flat")
+    generate_source(spark, rows=300, seed=7).write.parquet(src)
+    exploded = spark.read.parquet(src).withColumn(
+        "copy", F.explode(F.array(F.lit(1), F.lit(2)))
+    )
+    assert "REPARTITION_BY_COL" in _plan(cluster_by_month(with_month_key(exploded)))
+    assert one_task_if_small(exploded) is exploded
+
+
 def test_pipeline_fact_and_mart_writes_are_map_only(spark, tmp_path, monkeypatch):
-    """The fact (read-back silver joined to broadcast dims) and the fresh
-    mart (the read-back fact's window) write without a shuffle, one file
-    per month directory."""
+    """Every write of a small nightly batch runs without a shuffle: silver
+    (cleansed read-back bronze, in one task), the four dims (distinct +
+    numbering of read-back silver, in one task), the fact (read-back
+    silver joined to broadcast dims) and the fresh mart (the read-back
+    fact's window). Each month directory holds one file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from etl_data_spark import pipeline as P
+    from etl_data_spark.star import DIM_SPECS
 
     sc = spark.sparkContext
     groups = {}
+    parquet = DataFrameWriter.parquet
 
-    def in_group(fn):
-        def run(*args):
-            path = next(a for a in args if isinstance(a, str))
-            group = f"{os.path.basename(path)}-{tmp_path.name}"
-            groups[os.path.basename(path)] = group
-            sc.setJobGroup(group, "map-only write")
-            try:
-                return fn(*args)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
+    def in_group(writer, path, *args, **kwargs):
+        group = f"{os.path.basename(path)}-{tmp_path.name}"
+        groups[os.path.basename(path)] = group
+        sc.setJobGroup(group, "map-only write")
+        try:
+            return parquet(writer, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
-        return run
-
-    monkeypatch.setattr(P, "write_partitioned", in_group(P.write_partitioned))
-    monkeypatch.setattr(P, "overwrite_by_window", in_group(P.overwrite_by_window))
+    monkeypatch.setattr(DataFrameWriter, "parquet", in_group)
     wh = tmp_path / "wh"
     P.run_pipeline(spark, rows=300, seed=7, warehouse=str(wh))
 
     store = sc._jsc.sc().statusStore()
-    for table in ("fact_task", "mart_task"):
+    dims = [spec[0] for spec in DIM_SPECS]
+    for table in ["silver", *dims, "fact_task", "mart_task"]:
         jobs = sc.statusTracker().getJobIdsForGroup(groups[table])
         stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
         assert jobs and stages, table
         shuffled = sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages)
         assert shuffled == 0, (table, shuffled)
-        months = sorted((wh / table).glob(f"{MONTH_KEY}=*"))
-        assert months, table
-        assert all(len(list(m.glob("*.parquet"))) == 1 for m in months), table
+        if table not in dims:
+            files = _month_files(str(wh / table))
+            assert files and set(files.values()) == {1}, (table, files)
