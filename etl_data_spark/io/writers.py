@@ -19,8 +19,9 @@ one of three outcomes. A frame already month-aligned (a map-only plan over
 scans of month-partitioned tables, like the fact built from read-back
 silver and the mart window of the read-back fact) is written as it is: no
 shuffle, never more files than its input has file splits. A small frame (a
-map-only plan over file scans that cannot multiply rows, holding at most
-``spark.sql.adaptive.coalescePartitions.minPartitionSize``, like the silver
+map-only plan over file scans that cannot multiply rows, whose parquet
+holds at most ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` on
+disk, an approximation of AQE's shuffle-size floor; like the silver
 cleansed from a nightly batch's read-back bronze) is written from one task,
 one file per month. Any other frame is hash-shuffled so each month lands in
 a few files. :func:`one_task_if_small` puts a small input in one task for
@@ -267,7 +268,7 @@ def with_month_key(df: DataFrame, date_col: str = "effective_from") -> DataFrame
 
 
 # Nodes that never emit more rows than they read, or zip two inputs: what
-# a one-task plan may hold (see :func:`_small_map_only`).
+# a one-task plan may hold (see :func:`one_task_if_small`).
 _ROW_BOUNDED = frozenset(
     {
         "FileSourceScanExec",
@@ -330,31 +331,35 @@ def _month_aligned(df: DataFrame) -> bool:
     )
 
 
-def _small_map_only(df: DataFrame) -> bool:
-    """Whether ``df``'s plan is map-only over file scans that cannot
-    multiply rows (see :func:`_map_only_scans`) and those scans hold at
-    most ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` bytes:
-    the on-disk bytes of each scanned relation (every file of it, before
-    partition pruning), read from the plan — no job runs."""
+def one_task_if_small(df: DataFrame) -> DataFrame:
+    """``df`` in one partition (``coalesce(1)``, no shuffle) when it is a
+    small map-only read, else ``df`` itself.
+
+    Small map-only read: a plan that is map-only over file scans and
+    cannot multiply rows (``_map_only_scans`` with ``row_bounded``), whose
+    scanned relations hold at most
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` bytes on
+    disk. Adaptive execution does not coalesce a reduce side below that
+    floor, so a shuffle of a much smaller input ends in one task anyway
+    and buys no parallelism. The check approximates that floor: the
+    floor is on shuffle bytes, the check reads compressed parquet bytes
+    of every file of each relation (before partition pruning), from the
+    plan, without running a job. Rows grow when shuffled (20k-row
+    bronze: 0.48 MB on disk, about 0.75 MB shuffled), so an input just
+    under the floor could have reduced in two tasks and now runs in one.
+    A persisted frame (an in-memory scan) keeps the shuffle:
+    ``overwrite_by_window``'s merge of a persisted batch relies on the
+    hash clustering for one file per month. Over one partition an
+    aggregate, a window or a month-partitioned write plans no exchange."""
     scans = _map_only_scans(df, row_bounded=True)
     if scans is None:
-        return False
+        return df
     spark = df.sparkSession
     floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
     )
-    return sum(s.relation().sizeInBytes() for s in scans) <= floor
-
-
-def one_task_if_small(df: DataFrame) -> DataFrame:
-    """``df`` in one partition (``coalesce(1)``, no shuffle) when it is a
-    small map-only read (see :func:`_small_map_only`), else unchanged.
-
-    Adaptive execution never cuts a reduce side below that size, so a
-    shuffle of such an input would end in one task anyway: it buys no
-    parallelism and only moves bytes. Over one partition an aggregate, a
-    window or a month-partitioned write plans no exchange."""
-    return df.coalesce(1) if _small_map_only(df) else df
+    small = sum(s.relation().sizeInBytes() for s in scans) <= floor
+    return df.coalesce(1) if small else df
 
 
 def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> DataFrame:
@@ -370,7 +375,7 @@ def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> Data
       returned unchanged. Every file split lies in one month directory, so
       each task writes one file per month it read and the output never has
       more files than the input has file splits.
-    - A small frame (see :func:`_small_map_only`) — such as the silver
+    - A small frame (see :func:`one_task_if_small`) — such as the silver
       cleansed from a nightly batch's read-back bronze — is coalesced into
       one task, which writes one file per month.
     - Any other frame is hash-repartitioned on the month and a
@@ -385,8 +390,9 @@ def cluster_by_month(keyed: DataFrame, date_col: str = "effective_from") -> Data
     row->file layout moves."""
     if _month_aligned(keyed):
         return keyed
-    if _small_map_only(keyed):
-        return keyed.coalesce(1)
+    small = one_task_if_small(keyed)
+    if small is not keyed:
+        return small
     spread = keyed.sparkSession.sparkContext.defaultParallelism
     salt = F.pmod(F.xxhash64(F.col(date_col)), F.lit(max(1, spread // 12)))
     return keyed.repartition(F.col(MONTH_KEY), salt)

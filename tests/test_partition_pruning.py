@@ -174,3 +174,20 @@ def test_pipeline_fact_and_mart_writes_are_map_only(spark, tmp_path, monkeypatch
         if table not in dims:
             files = _month_files(str(wh / table))
             assert files and set(files.values()) == {1}, (table, files)
+
+
+def test_pipeline_reloads_keep_one_file_per_mart_month(spark, tmp_path):
+    """Nightly reloads into one warehouse, with windows that cut months in
+    two, keep every mart month in one file: a reload merges the month's
+    kept rows with the persisted batch, and that merge is clustered, so
+    files do not pile up run after run. (Each month gets at most one file
+    per salt value of the hash clustering: one below 24 cores.)"""
+    from etl_data_spark import pipeline as P
+
+    salts = max(1, spark.sparkContext.defaultParallelism // 12)
+    wh = str(tmp_path / "wh")
+    P.run_pipeline(spark, rows=300, seed=7, warehouse=wh)
+    for seed, start, end in ((8, "2023-03-15", "2023-06-15"), (9, "2023-05-10", "2023-08-20")):
+        P.run_pipeline(spark, rows=300, seed=seed, start_date=start, end_date=end, warehouse=wh)
+        files = _month_files(os.path.join(wh, "mart_task"))
+        assert len(files) > 1 and max(files.values()) <= salts, (start, files)
