@@ -30,7 +30,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--warehouse",
         default=None,
-        help="directory for persisted layers (default: a temp dir)",
+        help="directory for persisted layers (default: a temp dir); a reused "
+        "warehouse is upserted: stored dim ids are kept and the fact and mart "
+        "are replaced only inside the date window",
     )
     ap.add_argument("--dashboard", action="store_true", help="print the DQ dashboard")
     args = ap.parse_args(argv)

@@ -141,18 +141,29 @@ def rewrite(spark: SparkSession, path: str, tag: str, build):
     the new contents into the sibling ``{path}__tmp_{tag}``, then two
     Hadoop FS renames swap it in (live -> ``{path}__pre_{tag}`` trash,
     fresh -> live) — atomic per rename on HDFS/local; see the module
-    docstring for S3A. Returns what ``build`` returns."""
-    fs, _ = _fs(spark, path)
+    docstring for S3A. A first publish, with no live directory yet, is
+    the second rename alone. Returns what ``build`` returns."""
+    fs, live = _fs(spark, path)
     base = path.rstrip("/")
     tmp, trash = f"{base}__tmp_{tag}", f"{base}__pre_{tag}"
     _heal_rewrite(spark, path, tag)
     _delete(fs, spark, tmp)
     out = build(tmp)
     _delete(fs, spark, trash)
-    _rename(fs, spark, path, trash)
+    if fs.exists(live):
+        _rename(fs, spark, path, trash)
     _rename(fs, spark, tmp, path)
     _delete(fs, spark, trash)
     return out
+
+
+def published(spark: SparkSession, path: str, tag: str) -> bool:
+    """Whether the directory ``path``, published by :func:`rewrite` under
+    ``tag``, exists once a crash between that rewrite's renames is healed:
+    what a reader checks before it reads the directory (no Spark job)."""
+    _heal_rewrite(spark, path, tag)
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
 
 
 def _month_dirname(month: int | None) -> str:
@@ -197,12 +208,14 @@ def _recover_swaps(spark: SparkSession, fs, target: str) -> None:
             _rename(fs, spark, trash, live)
 
 
-def _has_live_months(spark: SparkSession, fs, target: str) -> bool:
-    """Whether ``target`` holds a live month directory (top-level listing
-    only, never recursive). A target without one — absent, or holding only
-    what a crashed first write leaves (``_temporary``) — is a fresh table:
-    there is nothing to keep and no schema to read."""
-    jt = _jpath(spark, target)
+def has_live_months(spark: SparkSession, target: str) -> bool:
+    """Whether ``target`` holds a live month directory, once any crashed
+    prior swap is healed (:func:`_recover_swaps`); a top-level listing,
+    never recursive, and no Spark job. A target without one — absent, or
+    holding only what a crashed first write leaves (``_temporary``) — is
+    a fresh table: there is nothing to keep and no schema to read."""
+    fs, jt = _fs(spark, target)
+    _recover_swaps(spark, fs, target)
     return fs.exists(jt) and any(
         st.isDirectory() and st.getPath().getName().startswith(f"{MONTH_KEY}=")
         for st in fs.listStatus(jt)
@@ -515,9 +528,9 @@ def overwrite_by_window(
     docstring for the per-filesystem contract.
     """
     fs, _ = _fs(spark, path)
-    _recover_swaps(spark, fs, path)  # heal any crashed prior reload first
     window_pred = window_replace_predicate(start_date, end_date, date_col, to_col)
-    if window_pred is None or not _has_live_months(spark, fs, path):
+    # heals any crashed prior reload first
+    if not has_live_months(spark, path) or window_pred is None:
         # fresh table, or an unbounded window that replaces everything
         # (reference DELETE with both params NULL deletes all rows) — a
         # static full overwrite, no keep-side read, so Spark's own

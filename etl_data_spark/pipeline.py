@@ -13,6 +13,16 @@ the written silver and fact and the mart the written fact. Row counts are observ
 passes the schema the layer was written with, so no job infers one. Without
 a warehouse the layers stay one lazy plan over the generated source.
 
+A fresh warehouse and a stored one take the same path. The dims and the
+fact an earlier run stored are read with their declared schemas
+(schemas.py; a filesystem check decides whether they exist) and passed to
+``build_star``. Each dim is upserted (stored ids never change, new keys
+are numbered above them) and published through ``io.writers.rewrite``,
+since Spark cannot overwrite a path it reads. The fact is written through
+``overwrite_by_window``, like the mart: the window's rows are replaced,
+new rows take ids above the kept rows' max, and months outside the window
+stay as they are.
+
 The MySQL migration stage (migrate_to_mysql.py:5-99) becomes an optional
 export: by default a second parquet "mart" table written with idempotent
 window replacement (the staging->target promote collapses into
@@ -35,11 +45,25 @@ from etl_data_spark.generate import generate_source
 from etl_data_spark.ingest import IngestReport, ingest_bronze
 from etl_data_spark.io.writers import (
     MONTH_KEY,
+    has_live_months,
     observe_counts,
     overwrite_by_window,
+    published,
+    rewrite,
     write_partitioned,
 )
-from etl_data_spark.star import StarSchema, build_fact, build_star
+from etl_data_spark.schemas import DIM_SCHEMAS, FACT_TASK_SCHEMA
+from etl_data_spark.star import (
+    DIM_SPECS,
+    StarSchema,
+    build_fact,
+    build_star,
+    kept_fact,
+)
+
+# the rewrite tag of a dim publish: its staging and trash directories
+# are ``{dim}__tmp_upsert`` and ``{dim}__pre_upsert``
+_DIM_TAG = "upsert"
 
 
 @dataclass
@@ -90,6 +114,22 @@ def _read_back(
     return spark.read.schema(keyed).parquet(path).drop(MONTH_KEY)
 
 
+def _stored_star(spark: SparkSession, warehouse: str) -> StarSchema:
+    """The dims and fact an earlier run left in ``warehouse``, read with
+    their declared schemas (filesystem checks, no job); a table not there
+    yet is left out, so a fresh warehouse gives an empty star."""
+    dims = {
+        name: _read_back(spark, path, DIM_SCHEMAS[name])
+        for name, *_ in DIM_SPECS
+        if published(spark, path := str(Path(warehouse) / name), _DIM_TAG)
+    }
+    fact_path = str(Path(warehouse) / "fact_task")
+    fact = None
+    if has_live_months(spark, fact_path):
+        fact = _read_back(spark, fact_path, FACT_TASK_SCHEMA, partitioned=True)
+    return StarSchema(dims=dims, fact=fact)
+
+
 def run_pipeline(
     spark: SparkSession,
     rows: int = 1000,
@@ -117,18 +157,22 @@ def run_pipeline(
     else:
         silver_count = silver.count()
 
-    star = build_star(silver, start_date=start_date, end_date=end_date)
+    stored = _stored_star(spark, warehouse) if warehouse else None
+    star = build_star(silver, stored, start_date=start_date, end_date=end_date)
     if warehouse:
-        # the fact joins the dims as written, so each dim's distinct +
-        # id-assigning plan runs once, for its own write
+        # the fact joins the dims as written, so the keyed dim pass runs
+        # once, for each dim's write. Each dim's plan reads its own stored
+        # dim only (the per-dim filter prunes the others' union branches),
+        # so publishing one cannot pull files from under the next.
         dims = {}
         for name, dim in star.dims.items():
             dim_path = str(Path(warehouse) / name)
-            dim.write.mode("overwrite").parquet(dim_path)
+            rewrite(spark, dim_path, _DIM_TAG, dim.write.parquet)
             dims[name] = _read_back(spark, dim_path, dim.schema)
-        fact = build_fact(silver, dims, start_date, end_date)
+        kept = kept_fact(stored.fact, start_date, end_date)
+        fact = build_fact(silver, dims, start_date, end_date, kept)
         fact_path = str(Path(warehouse) / "fact_task")
-        write_partitioned(fact, fact_path, "effective_from")
+        overwrite_by_window(spark, fact, fact_path, start_date, end_date)
         star = StarSchema(
             dims=dims,
             fact=_read_back(spark, fact_path, fact.schema, partitioned=True),

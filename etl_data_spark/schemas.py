@@ -59,6 +59,12 @@ DIM_CUSTOMER_SCHEMA = _dim_schema("customer_id", "customer_name")
 DIM_PRODUCT_SCHEMA = _dim_schema("product_id", "product_category")
 DIM_REGION_SCHEMA = _dim_schema("region_id", "region_name")
 DIM_STATUS_SCHEMA = _dim_schema("status_id", "status_name")
+DIM_SCHEMAS = {
+    "dim_customer": DIM_CUSTOMER_SCHEMA,
+    "dim_product": DIM_PRODUCT_SCHEMA,
+    "dim_region": DIM_REGION_SCHEMA,
+    "dim_status": DIM_STATUS_SCHEMA,
+}
 
 FACT_TASK_SCHEMA = T.StructType(
     [

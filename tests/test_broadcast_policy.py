@@ -151,7 +151,7 @@ ALLOWED = {
     ("queries_tpch.py", "q_tpch_q9_product_profit"): 1,  # nation-name tagging select
     ("report.py", "latest_batch"): 1,  # 1-row max date
     ("star.py", "build_fact"): 1,  # bounded-domain dims (~1e2 keys)
-    ("star.py", "upsert_dim"): 1,  # bounded-domain dim keys
+    ("star.py", "build_dims"): 2,  # stored dim keys + per-dim max ids (~1e2 keys)
     ("streaming/pipeline.py", "stream_static_enrich"): 1,  # static dim by contract
 }
 

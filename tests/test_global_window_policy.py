@@ -46,9 +46,6 @@ ALLOWED = {
     ("queries_stats.py", "q_survival_km"): 2,  # per duration in days
     # the frequency-of-frequency domain (distinct per-key counts)
     ("queries_stats.py", "q_join_skew_report"): 1,
-    # dense surrogate keys over a dim's distinct natural keys (bounded
-    # domains, ~1e2 keys)
-    ("star.py", "upsert_dim"): 1,
 }
 
 

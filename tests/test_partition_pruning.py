@@ -150,8 +150,10 @@ def test_pipeline_fact_and_mart_writes_are_map_only(spark, tmp_path, monkeypatch
     parquet = DataFrameWriter.parquet
 
     def in_group(writer, path, *args, **kwargs):
-        group = f"{os.path.basename(path)}-{tmp_path.name}"
-        groups[os.path.basename(path)] = group
+        # a dim is written to its rewrite staging dir, ``{dim}__tmp_{tag}``
+        table = os.path.basename(path).split("__tmp_")[0]
+        group = f"{table}-{tmp_path.name}"
+        groups[table] = group
         sc.setJobGroup(group, "map-only write")
         try:
             return parquet(writer, path, *args, **kwargs)

@@ -118,12 +118,12 @@ def test_fact_scale_mode_has_no_global_sort(spark, silver):
     Window sort in the fact build's physical plan. Dims are materialized
     first so their own tiny row_number windows don't appear in the
     inspected plan."""
-    from etl_data_spark.star import DIM_SPECS, build_fact, upsert_dim
+    from etl_data_spark.star import build_dims, build_fact
 
-    dims = {}
-    for dim_name, id_col, key_col, source_col in DIM_SPECS:
-        built = upsert_dim(None, silver, source_col, id_col, key_col)
-        dims[dim_name] = spark.createDataFrame(built.collect(), built.schema)
+    dims = {
+        name: spark.createDataFrame(built.collect(), built.schema)
+        for name, built in build_dims(silver).items()
+    }
 
     fact = build_fact(silver, dims)
     p = fact._jdf.queryExecution().executedPlan().toString()
@@ -489,6 +489,22 @@ def test_compact_small_files_recovers_crashed_swap(spark, tmp_path):
     assert not Path(path + "__pre_compact").exists()
 
 
+def test_rewrite_first_publish(spark, tmp_path):
+    """A rewrite of a directory that does not exist yet publishes the
+    built directory, with no staging or trash directory left behind."""
+    from pathlib import Path
+
+    from etl_data_spark.io.writers import rewrite
+
+    path = str(tmp_path / "t_first")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    out = rewrite(spark, path, "first", lambda tmp: df.write.parquet(tmp) or "built")
+    assert out == "built"
+    stored = sorted(map(tuple, spark.read.parquet(path).collect()))
+    assert stored == [(1, "a"), (2, "b")]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["t_first"]
+
+
 def test_overwrite_by_window_after_crashed_first_write(spark, tmp_path):
     """A first export killed mid-write leaves the target holding only
     ``_temporary/0``; with no live month directory it is a fresh table, so
@@ -551,6 +567,62 @@ def test_pipeline_job_budget(spark, tmp_path):
     assert report.loaded == src["loaded"]
     assert res.silver_count == spark.read.parquet(str(wh / "silver")).count() > 0
     assert res.exported_count == res.silver_count
+
+
+def _resolved_mart(spark, wh):
+    """fact_id -> the four natural keys, for the Jan-Aug 2023 mart rows,
+    resolved through the stored dims."""
+    from etl_data_spark.star import DIM_SPECS
+
+    mart = spark.read.parquet(str(wh / "mart_task"))
+    for name, id_col, key_col, _ in DIM_SPECS:
+        dim = spark.read.parquet(str(wh / name)).select(id_col, key_col)
+        mart = mart.join(dim, id_col, "left")
+    keys = [key_col for _, _, key_col, _ in DIM_SPECS]
+    early = mart.filter(F.col("effective_from") < "2023-09-01")
+    return {r["fact_id"]: tuple(r[k] for k in keys) for r in early.collect()}
+
+
+def _stored_dims(spark, wh):
+    from etl_data_spark.star import DIM_SPECS
+
+    return {
+        name: {
+            tuple(r)
+            for r in spark.read.parquet(str(wh / name)).select(id_col, key_col).collect()
+        }
+        for name, id_col, key_col, _ in DIM_SPECS
+    }
+
+
+def test_pipeline_reload_keeps_the_star_stable(spark, tmp_path):
+    """A windowed reload into a stored warehouse upserts the dims, as the
+    reference's ON CONFLICT DO NOTHING does: stored ids never change, so
+    every mart row outside the window still resolves to its natural keys,
+    and the fact keeps its months outside the window. A rerun of the same
+    window changes nothing."""
+    wh = tmp_path / "wh"
+    window = dict(start_date="2023-09-01", end_date="2023-10-31")
+    run_pipeline(spark, rows=600, seed=1, warehouse=str(wh))
+    mart1, dims1 = _resolved_mart(spark, wh), _stored_dims(spark, wh)
+    assert mart1 and all(None not in keys for keys in mart1.values())
+
+    run_pipeline(spark, rows=150, seed=2, warehouse=str(wh), **window)
+    assert _resolved_mart(spark, wh) == mart1
+    dims2 = _stored_dims(spark, wh)
+    for name, stored in dims1.items():
+        assert stored <= dims2[name], name
+        assert len({i for i, _ in dims2[name]}) == len(dims2[name]), name
+    fact = spark.read.parquet(str(wh / "fact_task"))
+    months = {r[0] for r in fact.select("part_month").distinct().collect()}
+    assert set(range(202301, 202309)) <= months
+    n_fact = fact.count()
+
+    run_pipeline(spark, rows=150, seed=2, warehouse=str(wh), **window)
+    assert _stored_dims(spark, wh) == dims2
+    fact = spark.read.parquet(str(wh / "fact_task"))
+    assert fact.count() == n_fact == fact.select("fact_id").distinct().count()
+    assert _resolved_mart(spark, wh) == mart1
 
 
 def _per_check_actions(silver, fact):
